@@ -21,13 +21,68 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import file_formats, stages
 from .errors import raise_classified
+from .materializations.copy_into import (
+    parse_copy_into,
+    parse_transform_copy,
+    run_copy_into,
+    run_transform_copy,
+)
+from .materializations.create_table import (
+    parse_create_or_replace_table,
+    parse_swap_with,
+    run_create_or_replace_table,
+    run_swap_with,
+)
 from .materializations.ddl import Ddl, configure_writer, generate_schema_name
 from .materializations.incremental import run_incremental
+from .materializations.insert_all import parse_insert_all, run_insert_all
+from .materializations.merge_stmt import (
+    MergeSpec,
+    parse_alter_columns,
+    parse_delete,
+    parse_merge,
+    parse_update,
+    run_alter_columns,
+    run_delete_statement,
+    run_merge_statement,
+    run_update_statement,
+)
 from .materializations.snapshot import run_snapshot
 from .observability.telemetry import TelemetryStore, harvest_last_execution
+from .procedures import (
+    drop_procedure,
+    parse_call,
+    parse_create_procedure,
+    parse_drop_procedure,
+    register_procedure,
+    run_call,
+    show_procedures,
+)
+from .sequences import (
+    create_sequence,
+    parse_create_sequence,
+    parse_drop_sequence,
+    show_sequences,
+)
 from .transpiler import Transpiler
 from .transpiler.core import TranspileError
+from .transpiler.tokenizer import (
+    COMMENT,
+    NUMBER,
+    QIDENT,
+    STRING,
+    WORD,
+    WS,
+    Token,
+    find_matching_paren,
+    next_code,
+    prev_code,
+    render,
+    split_args,
+    tokenize,
+)
 
 
 import contextlib
@@ -76,13 +131,11 @@ def _retry_prone(stmt: str) -> bool:
     values. Only these shapes pay the pre-flight analysis probe; a
     false positive costs one extra (quiet) analysis pass, a false
     negative falls back to the in-session retry loop."""
-    import re as _re
-
     return (
         "[" in stmt
-        or _re.search(r"(?i)\b(?:pos)?explode(?:_outer)?\s*\(", stmt)
+        or re.search(r"(?i)\b(?:pos)?explode(?:_outer)?\s*\(", stmt)
         is not None
-        or _re.search(r"(?i)\bto_json\s*\(", stmt) is not None
+        or re.search(r"(?i)\bto_json\s*\(", stmt) is not None
     )
 
 
@@ -143,8 +196,6 @@ def _wrap_string_explode(stmt: str, exc: Exception):
     JSON-text and native-array FLATTENs fixable: wrapping a native
     array<…> column would itself fail analysis. Returns None when the
     error is anything else or no wrappable site remains."""
-    import re as _re
-
     msg = str(exc)
     if (
         "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE" not in msg
@@ -152,12 +203,8 @@ def _wrap_string_explode(stmt: str, exc: Exception):
         or "explode" not in msg.lower()
     ):
         return None
-    m = _re.search(r'"([^"]+)" has the type "STRING"', msg)
-    offending = _re.sub(r"\s+", "", m.group(1)).lower() if m else None
-    from .transpiler.tokenizer import (
-        WORD, find_matching_paren, next_code, render, tokenize,
-    )
-
+    m = re.search(r'"([^"]+)" has the type "STRING"', msg)
+    offending = re.sub(r"\s+", "", m.group(1)).lower() if m else None
     toks = tokenize(stmt)
     # collect every explode-family call site: (fn_idx, open, close, inner)
     sites = []
@@ -179,12 +226,12 @@ def _wrap_string_explode(stmt: str, exc: Exception):
         return None
     unwrapped = [
         s for s in sites
-        if not _re.sub(r"\s+", "", s[3]).lower().startswith("from_json(")
+        if not re.sub(r"\s+", "", s[3]).lower().startswith("from_json(")
     ]
     target = None
     if offending:
         for s in unwrapped:
-            if _re.sub(r"\s+", "", s[3]).lower() == offending:
+            if re.sub(r"\s+", "", s[3]).lower() == offending:
                 target = s
                 break
     if target is None and len(unwrapped) == 1:
@@ -208,19 +255,13 @@ def _unwrap_string_tojson(stmt: str, exc: Exception):
     JSON-text column needs no wrap — drop it). Positive identification
     only: the named inner expression must match a to_json site, with
     the single-site fallback for ambiguous messages."""
-    import re as _re
-
     msg = str(exc)
     if ("DATATYPE_MISMATCH.INVALID_JSON_SCHEMA" not in msg
             or '"STRING"' not in msg):
         return None
-    m = _re.search(r'Cannot resolve "to_json\((.*)\)" due', msg)
-    offending = (_re.sub(r"\s+", "", m.group(1)).lower()
+    m = re.search(r'Cannot resolve "to_json\((.*)\)" due', msg)
+    offending = (re.sub(r"\s+", "", m.group(1)).lower()
                  if m else None)
-    from .transpiler.tokenizer import (
-        WORD, find_matching_paren, next_code, render, tokenize,
-    )
-
     toks = tokenize(stmt)
     sites = []
     for i, t in enumerate(toks):
@@ -235,7 +276,7 @@ def _unwrap_string_tojson(stmt: str, exc: Exception):
     target = None
     if offending:
         for s in sites:
-            norm = _re.sub(r"\s+", "", s[3]).lower().strip("()")
+            norm = re.sub(r"\s+", "", s[3]).lower().strip("()")
             if norm == offending.strip("()"):
                 target = s
                 break
@@ -267,8 +308,6 @@ def _wrap_string_subscript(stmt: str, exc: Exception):
     sites[0] could silently rewrite a VALID native-array subscript in
     the same statement — only an ambiguous message with exactly one
     candidate may fall back)."""
-    import re as _re
-
     msg = str(exc)
     if (
         "INVALID_EXTRACT_BASE_FIELD_TYPE" not in msg
@@ -277,12 +316,8 @@ def _wrap_string_subscript(stmt: str, exc: Exception):
         return None
     # greedy up to the '". Need a complex type' anchor — the quoted
     # expression may itself contain double quotes (folded JSON text)
-    m = _re.search(r'from "(.*)"\. Need', msg, _re.DOTALL)
-    offending = _re.sub(r"\s+", "", m.group(1)).lower() if m else None
-    from .transpiler.tokenizer import (
-        NUMBER, QIDENT, STRING, WORD, prev_code, render, tokenize,
-    )
-
+    m = re.search(r'from "(.*)"\. Need', msg, re.DOTALL)
+    offending = re.sub(r"\s+", "", m.group(1)).lower() if m else None
     toks = tokenize(stmt)
     n = len(toks)
     # candidate sites: '[' directly after a call ')' or identifier,
@@ -352,7 +387,7 @@ def _wrap_string_subscript(stmt: str, exc: Exception):
                     and "." not in inner[0].text:
                 path += f"[{inner[0].text}]"
             elif len(inner) == 1 and inner[0].kind == STRING and \
-                    _re.fullmatch(
+                    re.fullmatch(
                         r"[A-Za-z_][A-Za-z_0-9]*",
                         inner[0].text[1:-1].replace("''", "'")):
                 key = inner[0].text[1:-1].replace("''", "'")
@@ -376,7 +411,7 @@ def _wrap_string_subscript(stmt: str, exc: Exception):
             i += 1
             continue
         base_txt = render(toks[base_lo:base_hi])
-        if dyn_expr is None and _re.sub(r"\s+", "", base_txt).lower(
+        if dyn_expr is None and re.sub(r"\s+", "", base_txt).lower(
         ).startswith("get_json_object("):
             i = chain_end + 1
             continue
@@ -392,7 +427,7 @@ def _wrap_string_subscript(stmt: str, exc: Exception):
         s = base_norm
         while s.startswith("(") and s.endswith(")"):
             s = s[1:-1]
-        m2 = _re.fullmatch(r"parse_json\('(.*)'\)", s)
+        m2 = re.fullmatch(r"parse_json\('(.*)'\)", s)
         if m2:
             s = m2.group(1)
         if s.startswith("'") and s.endswith("'"):
@@ -402,7 +437,7 @@ def _wrap_string_subscript(stmt: str, exc: Exception):
     target = None
     if offending:
         for s in sites:
-            base_norm = _re.sub(r"\s+", "", s[3]).lower()
+            base_norm = re.sub(r"\s+", "", s[3]).lower()
             if base_norm == offending or _folded(base_norm) == offending:
                 target = s
                 break
@@ -488,6 +523,244 @@ def _coerce_day_intervals(df: DataFrame | None) -> DataFrame | None:
         for t, nt, f in zip(tmp, new_types, df.schema.fields)
     ))
     return out.toDF(*orig)
+
+
+def _rewrite_until_analyzed(stmt: str, err: Exception, attempt):
+    """The analyze-fail-rewrite loop: up to 8 rounds, each rewriting
+    the ONE site the analyzer error ``err`` names (string explode →
+    string subscript → already-string to_json) and retrying with
+    ``attempt(sql) -> (ok, value_or_error)``. Returns ``(sql, value)``
+    for the first rewrite that succeeds, or None when no rewrite
+    applies or 8 rounds don't converge."""
+    for _ in range(8):
+        stmt = (_wrap_string_explode(stmt, err)
+                or _wrap_string_subscript(stmt, err)
+                or _unwrap_string_tojson(stmt, err))
+        if stmt is None:
+            return None
+        ok, out = attempt(stmt)
+        if ok:
+            return stmt, out
+        err = out
+    return None
+
+
+def _classified(sql: str, fn, *args):
+    """``fn(*args)`` with the engine's error surface: ValueError and
+    TranspileError are already actionable and pass through; anything
+    else (Spark's own errors) is classified against ``sql``."""
+    try:
+        return fn(*args)
+    except (ValueError, TranspileError):
+        raise
+    except Exception as e:
+        raise_classified(e, sql)
+
+
+# ------------------------------------------------ statement dispatch
+# Statements with no local counterpart that answer one status row:
+# kind → (first column, head-word positions naming the statement,
+# status). Scripts run them (dbt grant post-hooks, session set-up),
+# so they no-op rather than fail. Governance objects — tags,
+# policies, shares — are NOT here: the transpiler refuses them,
+# because a no-op there would change data visibility.
+_NOOP_ROWS = {
+    # Spark has no multi-statement transactions; dbt wraps runs in
+    # BEGIN/COMMIT
+    "transaction": ("statement", (0,),
+                    "noop: Spark has no transactions; writes are "
+                    "per-statement atomic via staged swap"),
+    "grant": ("statement", (0,),
+              "noop: Spark's session catalog has no grant model; "
+              "manage access in the lakehouse catalog or storage "
+              "layer"),
+    # CREATE/DROP/ALTER ROLE|USER: the principals a grant attaches to
+    "principal": ("statement", (0, 1),
+                  "noop: Spark's session catalog has no role/user "
+                  "principals; manage identities in the lakehouse "
+                  "catalog or storage layer"),
+    # USE WAREHOUSE|ROLE|SECONDARY (USE [SCHEMA] x is Spark's own)
+    "use_noop": ("statement", (0, 1),
+                 "noop: Spark has no warehouse/role objects; compute "
+                 "comes from the cluster, access from the lakehouse "
+                 "catalog"),
+    # CREATE/ALTER/DROP WAREHOUSE: set-up scripts create, then USE
+    "warehouse": ("statement", (0, 1),
+                  "noop: Spark has no warehouse objects; compute is "
+                  "the cluster itself"),
+    # ALTER TABLE … SUSPEND|RESUME RECLUSTER: Snowflake's background
+    # reclustering toggle — locally reclustering is an explicit op
+    "recluster": ("statement", (-2, -1),
+                  "noop: no background reclustering service — "
+                  "recluster explicitly via materializations."
+                  "maintenance (Z-order / CLUSTER BY layout)"),
+    "describe_noop": ("object", (1,),
+                      "noop: no local compute/principal objects — the "
+                      "CREATE/USE family no-ops by design"),
+}
+# SHOW over the no-op families: shaped-but-empty listings, so
+# inspection scripts keep running (SHOW VARIABLES is not here —
+# session variables genuinely exist)
+_SHOW_EMPTY = {
+    "GRANTS": ("privilege", "granted_on", "name", "granted_to",
+               "grantee_name"),
+    "ROLES": ("name", "comment", "owner"),
+    "USERS": ("name", "login_name", "display_name", "disabled"),
+    "WAREHOUSES": ("name", "state", "size", "comment"),
+    "TRANSACTIONS": ("id", "session", "name", "state"),
+    "LOCKS": ("resource", "type", "transaction", "status"),
+}
+# SHOW over object families whose CREATE refuses: refuse with the
+# same pointer — an empty listing would imply the family exists here
+# (SHOW STAGES lists the stage registry; only its other forms refuse)
+_SHOW_REFUSE = {
+    "STREAMS": "Structured Streaming "
+               "(streaming.stream_incremental_append) for change "
+               "capture — Spark has no stream objects",
+    "TASKS": "an external scheduler (cron/Airflow) driving the CLI — "
+             "Spark has no task objects",
+    "PIPES": "a Structured Streaming file source for continuous "
+             "loading — Spark has no pipe objects",
+    "STAGES": "direct filesystem/object-store paths — Spark has no "
+              "stage objects",
+    "ALERTS": "external monitoring over the telemetry store — Spark "
+              "has no alert objects",
+}
+# DESCRIBE over the same families (a bare DESC STAGE s would parse as
+# DESCRIBE TABLE and blame a missing table named 'STAGE')
+_DESCRIBE_REFUSE = ("STAGE", "STREAM", "TASK", "PIPE", "ALERT",
+                    "INTEGRATION", "SHARE")
+
+# the leading code words that decide a statement's kind, longest
+# match first; _statement_kind adds the shapes a word list can't say
+_HEAD_KINDS = {
+    ("SET",): "set_var",
+    ("UNSET",): "set_var",
+    ("CREATE", "FILE", "FORMAT"): "file_format",
+    ("DROP", "FILE", "FORMAT"): "file_format",
+    ("SHOW", "FILE", "FORMATS"): "file_format",
+    ("DESC", "FILE", "FORMAT"): "file_format",
+    ("CREATE", "STAGE"): "stage",
+    ("DROP", "STAGE"): "stage",
+    ("SHOW", "STAGES"): "stage",
+    ("DESC", "STAGE"): "stage",
+    ("PUT",): "stage",
+    ("GET",): "stage",
+    ("LIST",): "stage",
+    ("LS",): "stage",
+    ("REMOVE",): "stage",
+    ("RM",): "stage",
+    ("CREATE", "SEQUENCE"): "create_sequence",
+    ("DROP", "SEQUENCE"): "drop_sequence",
+    ("SHOW", "SEQUENCES"): "show_sequences",
+    ("DESC", "SEQUENCE"): "describe_sequence",
+    ("CREATE", "PROCEDURE"): "create_procedure",
+    ("DROP", "PROCEDURE"): "drop_procedure",
+    ("CALL",): "call",
+    ("SHOW", "PROCEDURES"): "show_procedures",
+    ("UNDROP",): "undrop",
+    ("DROP", "TABLE"): "drop_table",
+    ("GRANT",): "grant",
+    ("REVOKE",): "grant",
+    **{(verb, obj): "principal"
+       for verb in ("CREATE", "DROP", "ALTER") for obj in ("ROLE", "USER")},
+    **{(verb, "WAREHOUSE"): "warehouse"
+       for verb in ("CREATE", "DROP", "ALTER")},
+    ("USE", "WAREHOUSE"): "use_noop",
+    ("USE", "ROLE"): "use_noop",
+    ("USE", "SECONDARY"): "use_noop",
+    ("ALTER", "SESSION"): "alter_session",
+    ("SHOW", "PARAMETERS"): "show_parameters",
+    ("SHOW", "VARIABLES"): "show_variables",
+    **{("SHOW", obj): "show_empty" for obj in _SHOW_EMPTY},
+    **{("SHOW", obj): "show_refuse" for obj in _SHOW_REFUSE
+       if obj != "STAGES"},
+    ("DESC", "RESULT"): "describe_result",
+    **{("DESC", obj): "describe_refuse" for obj in _DESCRIBE_REFUSE
+       if obj != "STAGE"},
+    **{("DESC", obj): "describe_noop"
+       for obj in ("WAREHOUSE", "USER", "ROLE")},
+    ("INSERT", "ALL"): "insert_all",
+    ("INSERT", "FIRST"): "insert_all",
+    ("INSERT", "OVERWRITE", "ALL"): "insert_all",
+    ("INSERT", "OVERWRITE", "FIRST"): "insert_all",
+    ("DELETE", "FROM"): "delete",
+    ("UPDATE",): "update",
+    ("MERGE", "INTO"): "merge",
+    ("COPY", "INTO"): "copy_into",
+}
+
+
+def _statement_kind(sql: str) -> tuple[str, list[str], str]:
+    """Classify ONE statement by its leading code tokens (comments
+    and whitespace skipped) → ``(kind, head, body)``.
+
+    ``head`` lists every code token's text, words upper-cased, with
+    ``CREATE OR REPLACE`` and ``CREATE TEMP[ORARY]`` → ``CREATE``,
+    ``SHOW TERSE`` and ``SHOW FUTURE`` → ``SHOW`` and ``DESCRIBE`` →
+    ``DESC`` folded and a trailing ``;`` dropped. ``body`` is the statement
+    from its first code token. The kind selects the handler in
+    ``_HANDLERS`` (or a data row above); ``"query"`` — the default —
+    is transpiled and run by Spark."""
+    toks = tokenize(sql)
+    body = render(toks[next_code(toks, 0):])
+    head = [t.upper if t.kind == WORD else t.text
+            for t in toks if t.kind not in (WS, COMMENT)]
+    if head[-1:] == [";"]:
+        head.pop()
+    replace = head[:3] == ["CREATE", "OR", "REPLACE"]
+    if replace:
+        del head[1:3]
+    if head[:1] == ["DESCRIBE"]:
+        head[0] = "DESC"
+    if head[:2] in (["SHOW", "TERSE"], ["SHOW", "FUTURE"],
+                    ["CREATE", "TEMP"], ["CREATE", "TEMPORARY"]):
+        del head[1]
+    kind = (_HEAD_KINDS.get(tuple(head[:3]))
+            or _HEAD_KINDS.get(tuple(head[:2]))
+            or _HEAD_KINDS.get(tuple(head[:1]), "query"))
+    # only the exact registry forms list/describe stages; the rest
+    # refuse like the other stage-less families
+    if kind == "stage" and head[0] == "SHOW" and not stages._SHOW_RE.match(
+            body):
+        kind = "show_refuse"
+    elif kind == "stage" and head[0] == "DESC" and not stages._DESC_RE.match(
+            body):
+        kind = "describe_refuse"
+    elif kind == "copy_into" and head[2:3] and (
+            head[2] == "@" or head[2].startswith("'@")):
+        kind = "stage"  # COPY INTO @stage … unloads
+    elif head[:1] in (["BEGIN"], ["COMMIT"], ["ROLLBACK"]) and (
+            len(head) == 1 or head[1] in ("TRANSACTION", "WORK", "NAME")):
+        kind = "transaction"
+    elif head[:2] == ["ALTER", "TABLE"]:
+        kind = _alter_table_kind(head)
+    elif replace and (head[1:2] == ["TABLE"]
+                      or head[1:3] == ["TRANSIENT", "TABLE"]):
+        kind = "create_or_replace_table"
+    return kind, head, body
+
+
+def _alter_table_kind(head: list[str]) -> str:
+    """ALTER TABLE name <verb> …: the RECLUSTER toggle, SWAP WITH,
+    SET <parameter>, or a column DDL (anything else — the column
+    handler passes what it does not own on to Spark)."""
+    if head[-1] == "RECLUSTER" and head[-2] in ("SUSPEND", "RESUME"):
+        return "recluster"
+    k = 2  # skip the dotted, possibly quoted, table name
+    while k < len(head):
+        if head[k] == "`":
+            k = (head.index("`", k + 1) + 1 if "`" in head[k + 1:]
+                 else len(head))
+        else:
+            k += 1
+        if k < len(head) and head[k] == ".":
+            k += 1
+            continue
+        break
+    verb = head[k] if k < len(head) else ""
+    return {"SWAP": "swap_with", "SET": "alter_table_set"}.get(
+        verb, "alter_columns")
 
 
 @dataclass
@@ -588,8 +861,6 @@ class IcebreakerEngine:
         return "'" + s + "'"
 
     def _substitute_session_vars(self, stmt_tokens) -> str:
-        from .transpiler.tokenizer import WORD, Token, render
-
         from .transpiler.tokenizer import COMMENT, STRING, WS, next_code
 
         out = []
@@ -671,8 +942,6 @@ class IcebreakerEngine:
         """Handle ``SET name = <expr>`` / ``UNSET name`` (Snowflake
         session variables). Dotted names (spark.sql.*) fall through to
         Spark's conf SET. Returns a status DataFrame or None."""
-        from .transpiler.tokenizer import WORD, next_code, render, tokenize
-
         toks = tokenize(raw)
         i = next_code(toks, 0)
         if i >= len(toks) or not toks[i].is_word("SET", "UNSET"):
@@ -725,7 +994,7 @@ class IcebreakerEngine:
         ``RESULT_SCAN(LAST_QUERY_ID([-n]))`` / ``RESULT_SCAN('<qid>')``
         re-reads a prior result and ``EXECUTE IMMEDIATE '<sql>'``
         re-enters the engine with the inner text."""
-        from .transpiler.core import render, split_statements, tokenize
+        from .transpiler.core import split_statements
 
         # Snowflake Scripting anonymous block (the whole input is one
         # [DECLARE …] BEGIN … END) — interpreted BEFORE statement
@@ -891,13 +1160,7 @@ class IcebreakerEngine:
         """``EXECUTE IMMEDIATE '<sql>'|$$<sql>$$|$var [USING (lits)]``
         → the inner SQL text with positional ``?`` binds substituted,
         or None when the statement is anything else."""
-        from .transpiler.tokenizer import (
-            find_matching_paren, next_code, render, split_args, tokenize,
-        )
-
-        import re as _re
-
-        m = _re.match(r"\s*EXECUTE\s+IMMEDIATE\s+", raw, _re.IGNORECASE)
+        m = re.match(r"\s*EXECUTE\s+IMMEDIATE\s+", raw, re.IGNORECASE)
         if m is None:
             return None
         rest = raw[m.end():]
@@ -964,10 +1227,6 @@ class IcebreakerEngine:
     def _resolve_result_scan(self, raw: str) -> str:
         """Replace ``[TABLE(]RESULT_SCAN(<qid>|LAST_QUERY_ID([n]))[)]``
         with a temp view over the recorded result."""
-        from .transpiler.tokenizer import (
-            STRING, WORD, find_matching_paren, next_code, prev_code,
-            render, tokenize,
-        )
         from .transpiler.transforms import _is_call
 
         toks = tokenize(raw)
@@ -1023,7 +1282,6 @@ class IcebreakerEngine:
                             and nxt < n and toks[nxt].is_op(")")):
                         out = out[:p2]
                         end = nxt
-            from .transpiler.tokenizer import Token
             out.append(Token(WORD, view))
             changed = True
             i = end + 1
@@ -1036,8 +1294,6 @@ class IcebreakerEngine:
         session catalog is case-insensitive and stores lowercase), or
         None for shapes this path doesn't own (3-part catalog names,
         internal __icebreaker temps)."""
-        from .transpiler.tokenizer import QIDENT, WORD, next_code
-
         parts = []
         k = start
         n = len(toks)
@@ -1070,8 +1326,6 @@ class IcebreakerEngine:
         can restore it. Anything else (views, missing tables, 3-part
         names) returns None and falls through to Spark's native DROP,
         keeping its exact error surface."""
-        from .transpiler.tokenizer import next_code, tokenize
-
         toks = tokenize(raw)
         i = next_code(toks, 0)
         if i >= len(toks) or not toks[i].is_word("DROP"):
@@ -1138,8 +1392,6 @@ class IcebreakerEngine:
         drop/recreate cycles). Ref has no local equivalent — Snowflake
         answers this from its metadata layer; here the ledger +
         rename-based retention is that layer."""
-        from .transpiler.tokenizer import next_code, tokenize
-
         toks = tokenize(raw)
         i = next_code(toks, 0)
         if i >= len(toks) or not toks[i].is_word("UNDROP"):
@@ -1218,9 +1470,7 @@ class IcebreakerEngine:
         """``DESC[RIBE] RESULT '<qid>' | LAST_QUERY_ID([n])`` → the
         recorded result's column schema (name, type, nullable) — the
         metadata face of the RESULT_SCAN surface."""
-        import re as _re
-
-        m = _re.search(
+        m = re.search(
             r"(?is)\bRESULT\s+(?:'([^']*)'|LAST_QUERY_ID\s*\(\s*"
             r"(-?\d*)\s*\))", raw)
         if m is None:
@@ -1247,820 +1497,155 @@ class IcebreakerEngine:
         )
 
     def _execute_one(self, raw: str) -> DataFrame | None:
-        """Dispatch ONE statement (already session-var substituted)."""
-        from .materializations.copy_into import parse_copy_into, run_copy_into
-        from .materializations.merge_stmt import (
-            parse_alter_columns,
-            parse_delete,
-            parse_merge,
-            parse_update,
-            run_alter_columns,
-            run_delete_statement,
-            run_merge_statement,
-            run_update_statement,
-        )
-
+        """Dispatch ONE statement (already session-var substituted):
+        classify it once, then run its kind's handler. A kind without
+        a handler, or a handler that returns None, takes the query
+        path."""
         if "MATERIALIZED" in raw.upper():
-            # CREATE [OR REPLACE] MATERIALIZED VIEW → TABLE before the
-            # CORT/table dispatch below, so the REPLACE form rides the
-            # staged swap (the transpiler PIPELINE also carries this
-            # transform for bare-transpiler users; here it must run
-            # BEFORE parse_create_or_replace_table sees the text)
-            from .transpiler.tokenizer import render as _rd
-            from .transpiler.tokenizer import tokenize as _tk
+            # CREATE [OR REPLACE] MATERIALIZED VIEW → TABLE before
+            # classification, so the REPLACE form rides the staged swap
+            # (the transpiler PIPELINE also carries this transform for
+            # bare-transpiler users; here it must run BEFORE the
+            # statement is classified as a CREATE OR REPLACE TABLE)
             from .transpiler.transforms import (
                 rewrite_create_view_modifiers,
                 rewrite_materialized_view,
             )
 
-            raw = _rd(rewrite_materialized_view(
-                rewrite_create_view_modifiers(_tk(raw))))
-        result: DataFrame | None = None
-        # single-iteration loop: the dispatch arms `continue` out once
-        # they have produced this statement's result
-        for _ in (0,):
-            sv = self._maybe_set_session_var(raw)
-            if sv is not None:
-                result = sv
-                continue
-            # local internal stages (r13): CREATE/DROP STAGE, SHOW
-            # STAGES, PUT/GET/LIST/REMOVE @stage, COPY INTO @stage
-            # unload — session registry of managed directories
-            # (stages.py); COPY INTO … FROM @stage resolves to the
-            # path-form loader further down
-            _up0 = raw.lstrip()[:8].upper()
-            # named FILE FORMAT objects (r13): session registry;
-            # references inline into COPY INTO / CREATE STAGE below
-            if re.search(r"\bFILE\s+FORMATS?\b", raw, re.IGNORECASE):
-                from . import file_formats as _ff
-
-                ff_result = _ff.dispatch(self, raw)
-                if ff_result is not None:
-                    result = ff_result
-                    continue
-            if ("STAGE" in raw.upper()
-                    or _up0.startswith(("PUT ", "LIST ", "LS ",
-                                        "REMOVE ", "RM "))
-                    or (_up0.startswith("GET ")
-                        and "@" in raw.split("\n", 1)[0])
-                    or re.match(r"^\s*COPY\s+INTO\s+@", raw,
-                                re.IGNORECASE)):
-                from . import file_formats as _ff
-                from . import stages as _stages
-
-                st_raw = raw
-                if re.search(r"\bFILE_FORMAT\b", raw, re.IGNORECASE):
-                    st_raw = _ff.resolve_format_name(self, raw)
-                st_result = _stages.dispatch(self, st_raw)
-                if st_result is not None:
-                    result = st_result
-                    continue
-            # direct staged-file queries (r13): SELECT $1 … FROM
-            # @stage [(FILE_FORMAT => …)] — also INSERT…SELECT/CTAS/
-            # MERGE USING over staged files — rewrite the stage ref
-            # to a temp view over the files, then continue normal
-            # dispatch on the clean SQL
-            if (re.match(r"^\s*(WITH|SELECT|INSERT|CREATE|MERGE)\b",
-                         raw, re.IGNORECASE)
-                    and re.search(
-                        r"\bFROM\s+('?@|DIRECTORY\s*\(\s*'?@)", raw,
-                        re.IGNORECASE)):
-                from . import stages as _stages
-
-                rewritten = _stages.rewrite_select_from_stage(
-                    self, raw)
-                if rewritten is not None:
-                    raw = rewritten
-            # CREATE/DROP SEQUENCE + SHOW SEQUENCES (r11): session
-            # registry; NEXTVAL substitution happened in execute()
-            up_head = raw.upper().split(None, 4)
-            if "SEQUENCE" in raw.upper() or "SEQUENCES" in raw.upper():
-                from .sequences import (
-                    create_sequence,
-                    parse_create_sequence,
-                    parse_drop_sequence,
-                    show_sequences,
-                )
-
-                cs = parse_create_sequence(raw)
-                if cs is not None:
-                    name, start, inc, replace, ine = cs
-                    created = create_sequence(
-                        self, name, start, inc, replace, ine)
-                    status = (f"Sequence {name.upper()} successfully "
-                              "created." if created
-                              else f"Sequence {name.upper()} already "
-                              "exists, statement skipped.")
-                    result = self.spark.createDataFrame(
-                        [(status,)], "status string")
-                    continue
-                ds = parse_drop_sequence(raw)
-                if ds is not None:
-                    name, if_exists = ds
-                    if name in self._sequences:
-                        del self._sequences[name]
-                        msg = f"{name.upper()} successfully dropped."
-                    elif if_exists:
-                        msg = (f"Drop statement executed successfully "
-                               f"({name.upper()} already dropped).")
-                    else:
-                        raise ValueError(
-                            f"DROP SEQUENCE: unknown sequence "
-                            f"{name!r} — use IF EXISTS")
-                    result = self.spark.createDataFrame(
-                        [(msg,)], "status string")
-                    continue
-                if up_head[:2] == ["SHOW", "SEQUENCES"]:
-                    result = show_sequences(self)
-                    continue
-                if (up_head and up_head[0] in ("DESC", "DESCRIBE")
-                        and len(up_head) > 2
-                        and up_head[1] == "SEQUENCE"):
-                    nm = up_head[2].strip('"').lower().rstrip(";")
-                    sq = self._sequences.get(nm)
-                    if sq is None:
-                        raise ValueError(
-                            f"DESCRIBE SEQUENCE: unknown sequence "
-                            f"{nm!r} (session sequences: "
-                            f"{', '.join(sorted(self._sequences)) or 'none'})")
-                    result = self.spark.createDataFrame(
-                        [(sq.name, sq.start, sq.increment, sq.next)],
-                        "name string, start bigint, increment bigint,"
-                        " next_value bigint")
-                    continue
-            # stored procedures: CREATE/DROP/SHOW PROCEDURE + CALL
-            from .procedures import (
-                parse_call,
-                parse_create_procedure,
-                parse_drop_procedure,
-                drop_procedure,
-                register_procedure,
-                run_call,
-                show_procedures,
+            raw = render(rewrite_materialized_view(
+                rewrite_create_view_modifiers(tokenize(raw))))
+        kind, head, body = _statement_kind(raw)
+        # direct staged-file queries (r13): SELECT $1 … FROM @stage
+        # [(FILE_FORMAT => …)] — also INSERT…SELECT/CTAS/MERGE USING
+        # over staged files — rewrite the stage ref to a temp view over
+        # the files, then dispatch the clean SQL
+        if (kind not in ("stage", "file_format")
+                and head[:1] in (["WITH"], ["SELECT"], ["INSERT"],
+                                 ["CREATE"], ["MERGE"])
+                and re.search(r"\bFROM\s+('?@|DIRECTORY\s*\(\s*'?@)",
+                              body, re.IGNORECASE)):
+            rewritten = stages.rewrite_select_from_stage(self, body)
+            if rewritten is not None:
+                raw = body = rewritten
+        if kind in _NOOP_ROWS:
+            column, at, status = _NOOP_ROWS[kind]
+            return self.spark.createDataFrame(
+                [(" ".join(head[i] for i in at).lower(), status)],
+                f"{column} string, status string",
             )
+        if kind == "show_empty":
+            from pyspark.sql.types import StringType, StructField, StructType
 
-            proc = parse_create_procedure(raw)
-            if proc is not None:
-                register_procedure(self, proc, proc.replace)
-                result = self.spark.createDataFrame(
-                    [(proc.name,
-                      f"Procedure {proc.name} successfully created.")],
-                    "name string, status string",
-                )
-                continue
-            dp = parse_drop_procedure(raw)
-            if dp is not None:
-                dropped = drop_procedure(self, *dp)
-                result = self.spark.createDataFrame(
-                    [(dp[0], "dropped" if dropped else "skipped (not found)")],
-                    "name string, status string",
-                )
-                continue
-            call = parse_call(raw)
-            if call is not None:
-                result = run_call(self, *call)
-                continue
-            hw0 = raw.split(None, 2)[:2]
-            if [w.upper().rstrip(";") for w in hw0] == ["SHOW", "PROCEDURES"]:
-                result = show_procedures(self)
-                continue
-            # transaction statements: Spark has no multi-statement
-            # transactions; dbt wraps runs in BEGIN/COMMIT, so accept
-            # and no-op rather than fail the whole script
-            # four head words: three-word heads (SHOW FUTURE GRANTS,
-            # CREATE OR REPLACE ROLE) must be dispatchable too; every
-            # check below slices what it needs
-            head = raw.split(None, 4)[:4]
-            hw = [w.upper().rstrip(";") for w in head]
-            if hw and hw[0] in ("BEGIN", "COMMIT", "ROLLBACK") and (
-                len(hw) == 1 or hw[1] in ("TRANSACTION", "WORK", "NAME")
-            ):
-                result = self.spark.createDataFrame(
-                    [(hw[0].lower(), "noop: Spark has no transactions; "
-                      "writes are per-statement atomic via staged swap")],
-                    "statement string, status string",
-                )
-                continue
-            # GRANT/REVOKE: dbt projects routinely run grant post-hooks;
-            # Spark's session catalog has no grant model (access control
-            # lives in the lakehouse catalog / storage layer) — accept
-            # and no-op like BEGIN/COMMIT rather than fail the script
-            # DROP TABLE → rename-based retention; UNDROP restores
-            if hw and hw[0] == "UNDROP":
-                r = self._maybe_undrop(raw)
-                if r is not None:
-                    result = r
-                    continue
-            if hw and hw[0] == "DROP":
-                r = self._maybe_drop_table(raw)
-                if r is not None:
-                    result = r
-                    continue
-            if hw and hw[0] in ("GRANT", "REVOKE"):
-                result = self.spark.createDataFrame(
-                    [(hw[0].lower(), "noop: Spark's session catalog has "
-                      "no grant model; manage access in the lakehouse "
-                      "catalog or storage layer")],
-                    "statement string, status string",
-                )
-                continue
-            # role/user lifecycle (r9 verdict #7 sweep): the grant
-            # model is a documented no-op, so the principals it would
-            # attach to are too — CREATE/DROP/ALTER ROLE|USER no-op
-            # with the same status rather than dying in Spark's parser
-            # (setup scripts run these before their GRANT post-hooks)
-            hw_n = (["CREATE"] + hw[3:]
-                    if hw[:3] == ["CREATE", "OR", "REPLACE"] else hw)
-            if (len(hw_n) > 1 and hw_n[0] in ("CREATE", "DROP", "ALTER")
-                    and hw_n[1] in ("ROLE", "USER")):
-                result = self.spark.createDataFrame(
-                    [(f"{hw_n[0].lower()} {hw_n[1].lower()}",
-                      "noop: Spark's session catalog has no "
-                      "role/user principals; manage identities in "
-                      "the lakehouse catalog or storage layer")],
-                    "statement string, status string",
-                )
-                continue
-            # USE WAREHOUSE/ROLE: no local warehouses or roles — accept
-            # and no-op like GRANT so session-setup scripts run
-            # (USE [SCHEMA|DATABASE] x falls through: Spark owns it)
-            if hw and hw[0] == "USE" and len(hw) > 1 and hw[1] in (
-                "WAREHOUSE", "ROLE", "SECONDARY"
-            ):
-                result = self.spark.createDataFrame(
-                    [("use " + hw[1].lower(), "noop: Spark has no "
-                      "warehouse/role objects; compute comes from the "
-                      "cluster, access from the lakehouse catalog")],
-                    "statement string, status string",
-                )
-                continue
-            # ALTER SESSION SET/UNSET for the parameters with a
-            # faithful Spark mapping: TIMEZONE → the session timezone
-            # conf (affects CURRENT_TIMESTAMP, TO_TIMESTAMP renders…),
-            # QUERY_TAG → recorded (observability tag, no semantics).
-            # Every OTHER parameter keeps the transpiler's actionable
-            # refusal — silently accepting e.g. WEEK_START would
-            # CHANGE answers (r9 batch 3)
-            if hw[:2] == ["ALTER", "SESSION"]:
-                import re as _re
-
-                m = _re.match(
-                    r"(?is)\s*ALTER\s+SESSION\s+SET\s+(\w+)\s*=\s*"
-                    r"(?:'([^']*)'|(\S+))\s*;?\s*$", raw)
-                mu = _re.match(
-                    r"(?is)\s*ALTER\s+SESSION\s+UNSET\s+(\w+)\s*;?\s*$",
-                    raw)
-                pname = (m.group(1) if m else
-                         mu.group(1) if mu else "").upper()
-                if pname == "TIMEZONE":
-                    if m:
-                        tz = m.group(2) or m.group(3)
-                        self.spark.conf.set(
-                            "spark.sql.session.timeZone", tz)
-                    else:
-                        self.spark.conf.unset(
-                            "spark.sql.session.timeZone")
-                    result = self.spark.createDataFrame(
-                        [("timezone", self.spark.conf.get(
-                            "spark.sql.session.timeZone"))],
-                        "parameter string, value string",
-                    )
-                    continue
-                if pname == "QUERY_TAG":
-                    tag = (m.group(2) if m and m.group(2) is not None
-                           else m.group(3) if m else None)
-                    if tag is None:
-                        self._session_vars.pop("query_tag", None)
-                    else:
-                        self._session_vars["query_tag"] = \
-                            self._render_literal(tag)
-                    result = self.spark.createDataFrame(
-                        [("query_tag", tag or "")],
-                        "parameter string, value string",
-                    )
-                    continue
-                # fall through → the transpiler's named refusal, now
-                # mentioning the two parameters that DO work
-            # CREATE/ALTER/DROP WAREHOUSE: compute objects with no
-            # local counterpart — setup scripts create then USE them,
-            # so the whole family no-ops consistently (governance
-            # objects — tags, policies, shares — REFUSE instead: a
-            # no-op there would change data visibility)
-            if (hw and len(hw) > 1 and hw[1] == "WAREHOUSE"
-                    and hw[0] in ("CREATE", "ALTER", "DROP")):
-                result = self.spark.createDataFrame(
-                    [(f"{hw[0].lower()} warehouse", "noop: Spark has "
-                      "no warehouse objects; compute is the cluster "
-                      "itself")],
-                    "statement string, status string",
-                )
-                continue
-            # ALTER TABLE … SUSPEND|RESUME RECLUSTER: Snowflake's
-            # background reclustering toggle — locally reclustering is
-            # the explicit maintenance op, so the toggle no-ops
-            if hw[:2] == ["ALTER", "TABLE"]:
-                tail_words = raw.upper().replace(";", " ").split()
-                if (len(tail_words) >= 2
-                        and tail_words[-1] == "RECLUSTER"
-                        and tail_words[-2] in ("SUSPEND", "RESUME")):
-                    result = self.spark.createDataFrame(
-                        [(tail_words[-2].lower() + " recluster",
-                          "noop: no background reclustering service — "
-                          "recluster explicitly via materializations."
-                          "maintenance (Z-order / CLUSTER BY layout)")],
-                        "statement string, status string",
-                    )
-                    continue
-                # ALTER TABLE t SET <snowflake parameter> = <value>
-                # (r9 batch 4): COMMENT maps to Spark's table property,
-                # DATA_RETENTION_TIME_IN_DAYS no-ops naming the
-                # engine's own retention, CHANGE_TRACKING refuses
-                # naming streaming (it backs STREAM objects), anything
-                # else refuses naming the supported set — the Spark
-                # grammar forms (SET TBLPROPERTIES/SERDE…) never match
-                # this name-=-value shape and fall through untouched
-                import re as _re
-
-                m = _re.match(
-                    r"(?is)\s*ALTER\s+TABLE\s+([\w.`\"]+)\s+SET\s+"
-                    r"([A-Z_]+)\s*=\s*(?:'((?:[^']|'')*)'|(\S+))"
-                    r"\s*;?\s*$",
-                    raw)
-                if m and m.group(2).upper() not in (
-                    "TBLPROPERTIES", "SERDEPROPERTIES", "LOCATION",
-                ):
-                    tname, pname = m.group(1), m.group(2).upper()
-                    val = (m.group(3).replace("''", "'")
-                           if m.group(3) is not None else m.group(4))
-                    if pname == "COMMENT":
-                        esc = val.replace("'", "''")
-                        self.spark.sql(
-                            f"ALTER TABLE {tname} SET TBLPROPERTIES "
-                            f"('comment' = '{esc}')")
-                        result = self.spark.createDataFrame(
-                            [("comment", val)],
-                            "parameter string, value string")
-                        continue
-                    if pname == "DATA_RETENTION_TIME_IN_DAYS":
-                        result = self.spark.createDataFrame(
-                            [(pname.lower(), "noop: retention here is "
-                              "the engine's session-scoped UNDROP "
-                              f"ledger (last {self._drop_retention} "
-                              "drops), not a per-table time window")],
-                            "statement string, status string")
-                        continue
-                    if pname == "CHANGE_TRACKING":
-                        raise ValueError(
-                            "ALTER TABLE … SET CHANGE_TRACKING: "
-                            "change tracking backs STREAM objects, "
-                            "which have no Spark equivalent — use "
-                            "Structured Streaming (streaming.stream_"
-                            "incremental_append) for change capture"
-                        )
-                    raise ValueError(
-                        f"ALTER TABLE … SET {pname}: unsupported "
-                        "table parameter — COMMENT (mapped to the "
-                        "table property) and DATA_RETENTION_TIME_IN_"
-                        "DAYS (no-op; see UNDROP retention) are "
-                        "handled; Spark-native forms (SET "
-                        "TBLPROPERTIES …) pass through"
-                    )
-            # SHOW PARAMETERS [LIKE 'p'] [IN …] → Spark's conf listing
-            # (SET -v shape: key, value, meaning); the IN scope is
-            # dropped — one engine, one scope
-            if hw[:2] == ["SHOW", "PARAMETERS"]:
-                import re as _re
-
-                df = self.spark.sql("SET -v")
-                m = _re.search(r"(?i)\bLIKE\s+'([^']*)'", raw)
-                if m:
-                    from pyspark.sql import functions as F
-
-                    df = df.filter(
-                        F.lower(F.col("key")).like(m.group(1).lower())
-                    )
-                result = df
-                continue
-            # DESCRIBE RESULT '<qid>' | LAST_QUERY_ID([n]) — schema of
-            # a recorded statement result (the RESULT_SCAN family)
-            if (hw and hw[0] in ("DESC", "DESCRIBE")
-                    and len(hw) > 1 and hw[1] == "RESULT"):
-                result = self._describe_result(raw)
-                continue
-            # SHOW GRANTS: the grant surface is a documented no-op, so
-            # the listing is shaped-but-empty (not an error — scripts
-            # inspect it after their GRANT post-hooks)
-            # TERSE is a column-subset hint — same listings here
-            shw = (["SHOW"] + hw[2:]
-                   if hw[:2] == ["SHOW", "TERSE"] else hw)
-            if (shw[:2] == ["SHOW", "GRANTS"]
-                    or shw[:3] == ["SHOW", "FUTURE", "GRANTS"]):
-                from pyspark.sql.types import (
-                    StringType, StructField, StructType,
-                )
-
-                result = self.spark.createDataFrame(
-                    [],
-                    StructType([
-                        StructField(c, StringType())
-                        for c in ("privilege", "granted_on", "name",
-                                  "granted_to", "grantee_name")
-                    ]),
-                )
-                continue
-            # SHOW ROLES / SHOW USERS: principals are a documented
-            # no-op (see CREATE ROLE) — shaped-but-empty listings so
-            # inspection scripts keep running. Same rule for the other
-            # NOOP families (warehouses, transactions/locks): CREATE
-            # no-ops, so the listing is honestly empty. VARIABLES is
-            # the exception — session variables genuinely EXIST (SET
-            # var = …), so the listing shows them.
-            _SHOW_EMPTY = {
-                "ROLES": ("name", "comment", "owner"),
-                "USERS": ("name", "login_name", "display_name",
-                          "disabled"),
-                "WAREHOUSES": ("name", "state", "size", "comment"),
-                "TRANSACTIONS": ("id", "session", "name", "state"),
-                "LOCKS": ("resource", "type", "transaction", "status"),
-            }
-            if shw[0] == "SHOW" and len(shw) > 1 and shw[1] in _SHOW_EMPTY:
-                from pyspark.sql.types import (
-                    StringType, StructField, StructType,
-                )
-
-                result = self.spark.createDataFrame(
-                    [],
-                    StructType([StructField(c, StringType())
-                                for c in _SHOW_EMPTY[shw[1]]]),
-                )
-                continue
-            if shw[:2] == ["SHOW", "VARIABLES"]:
-                from pyspark.sql.types import (
-                    StringType, StructField, StructType,
-                )
-
-                schema = StructType([
-                    StructField("name", StringType()),
-                    StructField("value", StringType()),
-                ])
-                def _display(v: str) -> str:
-                    # stored as literal TEXT for substitution; display
-                    # string literals unquoted like Snowflake does
-                    if len(v) >= 2 and v[0] == v[-1] == "'":
-                        return v[1:-1].replace("''", "'")
-                    return v
-
-                result = self.spark.createDataFrame(
-                    [(k, _display(v))
-                     for k, v in sorted(self._session_vars.items())],
-                    schema,
-                )
-                continue
-            # SHOW over object families whose CREATE refuses (streams,
-            # tasks, pipes, stages, alerts, sequences): refuse with
-            # the same pointer — an empty listing would imply the
-            # object family exists here
-            _SHOW_REFUSE = {
-                "STREAMS": "Structured Streaming "
-                           "(streaming.stream_incremental_append) for "
-                           "change capture — Spark has no stream "
-                           "objects",
-                "TASKS": "an external scheduler (cron/Airflow) driving "
-                         "the CLI — Spark has no task objects",
-                "PIPES": "a Structured Streaming file source for "
-                         "continuous loading — Spark has no pipe "
-                         "objects",
-                "STAGES": "direct filesystem/object-store paths — "
-                          "Spark has no stage objects",
-                "ALERTS": "external monitoring over the telemetry "
-                          "store — Spark has no alert objects",
-            }
-            if shw[0] == "SHOW" and len(shw) > 1 and shw[1] in _SHOW_REFUSE:
-                raise TranspileError(
-                    f"SHOW {shw[1]}: Spark has no "
-                    f"{shw[1].lower().rstrip('s')} objects. Use "
-                    f"{_SHOW_REFUSE[shw[1]]}."
-                )
-            # DESCRIBE over the same families: the bare fallthrough
-            # parsed `DESC STAGE s` as DESCRIBE TABLE and blamed a
-            # missing table named 'STAGE' — misleading
-            if (hw and hw[0] in ("DESC", "DESCRIBE") and len(hw) > 1
-                    and hw[1] in ("STAGE", "STREAM", "TASK", "PIPE",
-                                  "ALERT", "INTEGRATION",
-                                  "SHARE")):
-                raise TranspileError(
-                    f"DESCRIBE {hw[1]}: Spark has no "
-                    f"{hw[1].lower()} objects (their CREATE refuses "
-                    "with the idiomatic replacement); there is "
-                    "nothing to describe."
-                )
-            if (hw and hw[0] in ("DESC", "DESCRIBE") and len(hw) > 1
-                    and hw[1] in ("WAREHOUSE", "USER", "ROLE")):
-                result = self.spark.createDataFrame(
-                    [(hw[1].lower(),
-                      "noop: no local compute/principal objects — "
-                      "the CREATE/USE family no-ops by design")],
-                    "object string, status string",
-                )
-                continue
-            from .materializations.create_table import (
-                parse_swap_with,
-                run_swap_with,
+            return self.spark.createDataFrame([], StructType(
+                [StructField(c, StringType()) for c in _SHOW_EMPTY[head[1]]]))
+        if kind == "show_refuse":
+            raise TranspileError(
+                f"SHOW {head[1]}: Spark has no "
+                f"{head[1].lower().rstrip('s')} objects. Use "
+                f"{_SHOW_REFUSE[head[1]]}."
             )
-
-            swap = parse_swap_with(raw)
-            if swap is not None:
-                try:
-                    stats = run_swap_with(self.spark, *swap)
-                except (ValueError, TranspileError):
-                    raise
-                except Exception as e:
-                    raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_affected"])],
-                    "table string, rows_affected long",
-                )
-                continue
-            from .materializations.insert_all import (
-                parse_insert_all,
-                run_insert_all,
+        if kind == "describe_refuse":
+            raise TranspileError(
+                f"DESCRIBE {head[1]}: Spark has no "
+                f"{head[1].lower()} objects (their CREATE refuses "
+                "with the idiomatic replacement); there is "
+                "nothing to describe."
             )
-
-            mti = parse_insert_all(raw)
-            if mti is not None:
-                try:
-                    stats = run_insert_all(
-                        self.spark, mti, self.transpiler, self.execute
-                    )
-                except (ValueError, TranspileError):
-                    raise
-                except Exception as e:
-                    raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_affected"])],
-                    "table string, rows_affected long",
-                )
-                continue
-            # CREATE OR REPLACE TABLE: Spark's REPLACE TABLE needs a
-            # DSv2 catalog — lower onto the overwrite-write staged swap
-            # the table materialization uses (create_table.py)
-            from .materializations.create_table import (
-                parse_create_or_replace_table,
-                run_create_or_replace_table,
-            )
-
-            cort_spec = parse_create_or_replace_table(raw)
-            if cort_spec is not None:
-                try:
-                    stats = run_create_or_replace_table(
-                        self.spark, cort_spec, self.transpiler, self.execute
-                    )
-                except (ValueError, TranspileError):
-                    raise
-                except Exception as e:
-                    raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_affected"])],
-                    "table string, rows_affected long",
-                )
-                continue
-            alter_spec = parse_alter_columns(raw)
-            if alter_spec is not None:
-                try:
-                    stats = run_alter_columns(self.spark, alter_spec)
-                except (ValueError, TranspileError):
-                    raise
-                except Exception as e:
-                    raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_affected"])],
-                    "table string, rows_affected long",
-                )
-                continue
-            # row-level DML on parquet tables lowers onto the staged
-            # rewrite (DELETE/UPDATE/MERGE all share the swap machinery)
-            dml_handled = False
-            for parse_fn, run_fn in (
-                (parse_delete, run_delete_statement),
-                (parse_update, run_update_statement),
-            ):
-                dml_spec = parse_fn(raw)
-                if dml_spec is None:
-                    continue
-                from .materializations.merge_stmt import MergeSpec
-
-                if isinstance(dml_spec, MergeSpec):
-                    # UPDATE ... FROM lowered onto the merge machinery
-                    run_fn = run_merge_statement
-                try:
-                    stats = run_fn(self.spark, dml_spec, self.transpiler)
-                except (ValueError, TranspileError):
-                    raise
-                except Exception as e:
-                    raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_affected"])],
-                    "table string, rows_affected long",
-                )
-                dml_handled = True
-                break
-            if dml_handled:
-                continue
-            merge_spec = parse_merge(raw)
-            if merge_spec is not None:
-                # parquet tables have no row-level MERGE; lower onto the
-                # incremental rewrite (same routing pattern as COPY INTO)
-                try:
-                    stats = run_merge_statement(self.spark, merge_spec, self.transpiler)
-                except (ValueError, TranspileError):
-                    raise  # already actionable
-                except Exception as e:
-                    raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_affected"])],
-                    "table string, rows_affected long",
-                )
-                continue
-            # COPY INTO … FROM @stage resolves the stage to its local
-            # directory (r13, stages.py) and rides the path-form
-            # loader; statements with no stage FROM pass unchanged
-            copy_raw = raw
-            if re.search(
-                    r"\bFORMAT_NAME\b|FILE_FORMAT\s*=\s*(?!\()", raw,
-                    re.IGNORECASE):
-                from . import file_formats as _ff
-
-                copy_raw = _ff.resolve_format_name(self, copy_raw)
-            if re.search(r"\bFROM\s+'?@", copy_raw, re.IGNORECASE):
-                from . import stages as _stages
-
-                resolved = _stages.resolve_copy_into_stage(
-                    self, copy_raw)
-                if resolved is not None:
-                    copy_raw = resolved
-            # transformation COPY (r13): COPY INTO t [(cols)] FROM
-            # (SELECT $1, … FROM @stage|'<path>') — positional file
-            # read + transpiled SELECT (copy_into.py)
-            from .materializations.copy_into import (
-                parse_transform_copy,
-                run_transform_copy,
-            )
-
-            tspec = parse_transform_copy(copy_raw)
-            if tspec is not None:
-                src = tspec.src.strip("'")
-                if src.startswith("@"):
-                    from . import stages as _stages
-
-                    stage, sub = _stages._resolve_ref(self, src)
-                    path = (os.path.join(stage.path, sub)
-                            if sub else stage.path)
-                else:
-                    path = src
-                try:
-                    stats = run_transform_copy(
-                        self.spark, tspec, self.transpiler, path)
-                except (ValueError, TranspileError):
-                    raise  # already actionable
-                except Exception as e:
-                    raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_loaded"],
-                      stats["format"])],
-                    "table string, rows_loaded long, format string",
-                )
-                continue
-            spec = parse_copy_into(copy_raw)
-            if spec is not None:
-                try:
-                    stats = run_copy_into(self.spark, spec)
-                except ValueError:
-                    raise  # already actionable
-                except Exception as e:  # same error surface as spark.sql
-                    raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_loaded"], stats["format"])],
-                    "table string, rows_loaded long, format string",
-                )
-                continue
-            # MATCH_RECOGNIZE: no Spark SQL clause exists — parse the
-            # spec and run the applyInPandas pattern automaton (same
-            # engine-layer routing as COPY INTO / MERGE)
-            if "MATCH_RECOGNIZE" in raw.upper():
-                from .transpiler.match_recognize_sql import (
-                    parse_match_recognize,
-                    resolve_nested_match_recognize,
-                    run_match_recognize_statement,
-                )
-
-                try:
-                    mr = parse_match_recognize(raw)
-                except TranspileError:
-                    # top-level shape the fast path doesn't take (e.g.
-                    # INSERT INTO … SELECT … MATCH_RECOGNIZE) — the
-                    # nested resolver below handles the general case;
-                    # body errors re-raise identically from it
-                    mr = None
-                if mr is not None:
-                    try:
-                        result = run_match_recognize_statement(
-                            self.spark, mr, self.transpiler
-                        )
-                    except (ValueError, TranspileError):
-                        raise
-                    except Exception as e:
-                        raise_classified(e, raw)
-                    continue
-                # MATCH_RECOGNIZE inside a CTE / subquery / non-SELECT
-                # statement: evaluate each clause into a temp view and
-                # continue down the normal pipeline with the rewritten
-                # statement (r8 VERDICT Missing #4)
-                try:
-                    raw = resolve_nested_match_recognize(
-                        self.spark, raw, self.transpiler
-                    )
-                except (ValueError, TranspileError):
-                    raise
-                except Exception as e:
-                    raise_classified(e, raw)
-            # dynamic PIVOT (FOR col IN (ANY) / IN (SELECT …)): resolve
-            # the value list on the live session before transpiling —
-            # Spark PIVOT needs explicit literals (Snowflake's compiler
-            # runs the same enumeration)
-            if "PIVOT" in raw.upper():
-                from .transpiler.pivot_dynamic import (
-                    resolve_dynamic_pivot,
-                    resolve_pivot_default,
-                )
-
-                raw = resolve_dynamic_pivot(self.spark, raw, self.transpiler)
-                # DEFAULT ON NULL → conditional aggregation (needs the
-                # source schema, so it also lives here; after dynamic
-                # resolution so IN lists are literal)
-                raw = resolve_pivot_default(self.spark, raw, self.transpiler)
-            # time travel AT/BEFORE(TIMESTAMP => x): snapshot (SCD2)
-            # tables rewrite onto their validity-interval predicate —
-            # needs the live catalog, so it resolves here, not in the
-            # pure transpiler (which keeps the general refusal)
-            from .transpiler.time_travel import resolve_time_travel
-
-            raw = resolve_time_travel(self.spark, raw, self.transpiler,
-                                      engine=self)
-            for stmt in self.transpiler.to_spark_statements(raw):
-                # pre-flight the analyze-fail-rewrite shapes in a
-                # listener-silent probe session so a statement that
-                # SUCCEEDS after rewriting never posts a
-                # failed-analysis event to the ExecutionListenerBus
-                # (r11 judge What's-wrong #2: pending merge/CTAS
-                # Observations turn those events into ERROR traces)
-                if _retry_prone(stmt):
-                    ok, perr = _probe_analyze(self.spark, stmt)
-                    attempt = stmt
-                    for _ in range(8):
-                        if ok:
-                            break
-                        retry_sql = (_wrap_string_explode(attempt, perr)
-                                     or _wrap_string_subscript(
-                                         attempt, perr)
-                                     or _unwrap_string_tojson(
-                                         attempt, perr))
-                        if retry_sql is None:
-                            break  # real session raises authoritatively
-                        attempt = retry_sql
-                        ok, perr = _probe_analyze(self.spark, attempt)
-                    if ok:
-                        stmt = attempt
-                try:
-                    with _quiet_query_context_logs():
-                        result = self.spark.sql(stmt)
-                except Exception as e:
-                    # FLATTEN over a JSON-TEXT column: the transpiler
-                    # wraps statically-known JSON text (T37) but a
-                    # plain column ref is assumed a native array — when
-                    # the analyzer proves it a STRING, retry with the
-                    # from_json wrap (the same contract T37 uses), one
-                    # offending site per pass so native-array FLATTENs
-                    # in the same statement stay unwrapped
-                    attempt, err, retried = stmt, e, None
-                    for _ in range(8):
-                        retry_sql = (_wrap_string_explode(attempt, err)
-                                     or _wrap_string_subscript(
-                                         attempt, err)
-                                     or _unwrap_string_tojson(
-                                         attempt, err))
-                        if retry_sql is None:
-                            break
-                        try:
-                            with _quiet_query_context_logs():
-                                retried = self.spark.sql(retry_sql)
-                            break
-                        except Exception as e2:
-                            attempt, err = retry_sql, e2
-                    if retried is None:
-                        raise_classified(e, stmt)  # the ORIGINAL error
-                    result = retried
-                    continue
+        handler = _HANDLERS.get(kind)
+        result = handler(self, body) if handler is not None else None
+        if result is None:
+            result = self._run_query(raw)
         return _coerce_day_intervals(result)
+
+    def _run_query(self, raw: str) -> DataFrame | None:
+        """The default kind: resolve the live-session rewrites, then
+        transpile and run each resulting Spark statement."""
+        # MATCH_RECOGNIZE: no Spark SQL clause exists — parse the
+        # spec and run the applyInPandas pattern automaton (same
+        # engine-layer routing as COPY INTO / MERGE)
+        if "MATCH_RECOGNIZE" in raw.upper():
+            from .transpiler.match_recognize_sql import (
+                parse_match_recognize,
+                resolve_nested_match_recognize,
+                run_match_recognize_statement,
+            )
+
+            try:
+                mr = parse_match_recognize(raw)
+            except TranspileError:
+                # top-level shape the fast path doesn't take (e.g.
+                # INSERT INTO … SELECT … MATCH_RECOGNIZE) — the
+                # nested resolver below handles the general case;
+                # body errors re-raise identically from it
+                mr = None
+            if mr is not None:
+                return _classified(raw, run_match_recognize_statement,
+                                   self.spark, mr, self.transpiler)
+            # MATCH_RECOGNIZE inside a CTE / subquery / non-SELECT
+            # statement: evaluate each clause into a temp view and
+            # continue down the normal pipeline with the rewritten
+            # statement (r8 VERDICT Missing #4)
+            raw = _classified(raw, resolve_nested_match_recognize,
+                              self.spark, raw, self.transpiler)
+        # dynamic PIVOT (FOR col IN (ANY) / IN (SELECT …)): resolve
+        # the value list on the live session before transpiling —
+        # Spark PIVOT needs explicit literals (Snowflake's compiler
+        # runs the same enumeration)
+        if "PIVOT" in raw.upper():
+            from .transpiler.pivot_dynamic import (
+                resolve_dynamic_pivot,
+                resolve_pivot_default,
+            )
+
+            raw = resolve_dynamic_pivot(self.spark, raw, self.transpiler)
+            # DEFAULT ON NULL → conditional aggregation (needs the
+            # source schema, so it also lives here; after dynamic
+            # resolution so IN lists are literal)
+            raw = resolve_pivot_default(self.spark, raw, self.transpiler)
+        # time travel AT/BEFORE(TIMESTAMP => x): snapshot (SCD2)
+        # tables rewrite onto their validity-interval predicate —
+        # needs the live catalog, so it resolves here, not in the
+        # pure transpiler (which keeps the general refusal)
+        from .transpiler.time_travel import resolve_time_travel
+
+        raw = resolve_time_travel(self.spark, raw, self.transpiler,
+                                  engine=self)
+        result: DataFrame | None = None
+        for stmt in self.transpiler.to_spark_statements(raw):
+            # pre-flight the analyze-fail-rewrite shapes in a
+            # listener-silent probe session so a statement that
+            # SUCCEEDS after rewriting never posts a
+            # failed-analysis event to the ExecutionListenerBus
+            # (r11 judge What's-wrong #2: pending merge/CTAS
+            # Observations turn those events into ERROR traces)
+            if _retry_prone(stmt):
+                ok, perr = _probe_analyze(self.spark, stmt)
+                if not ok:
+                    fixed = _rewrite_until_analyzed(
+                        stmt, perr, lambda s: _probe_analyze(self.spark, s))
+                    if fixed is not None:
+                        stmt = fixed[0]
+            # in-session: a statement the probe skipped or could not
+            # fix (FLATTEN over a JSON-TEXT column the transpiler
+            # assumed a native array, …) retries through the same
+            # rewrites; the ORIGINAL error surfaces when none applies
+            ok, out = self._try_sql(stmt)
+            if not ok:
+                fixed = _rewrite_until_analyzed(stmt, out, self._try_sql)
+                if fixed is None:
+                    raise_classified(out, stmt)
+                out = fixed[1]
+            result = out
+        return result
+
+    def _try_sql(self, stmt: str):
+        """``(True, DataFrame)`` or ``(False, exception)`` for one
+        spark.sql attempt, with the query-context loggers quiet."""
+        try:
+            with _quiet_query_context_logs():
+                return True, self.spark.sql(stmt)
+        except Exception as e:
+            return False, e
 
     def _maybe_sample(self, df: DataFrame, sql: str) -> DataFrame:
         # ref impl.py:403-415: wrap in LIMIT n unless SQL already limits
@@ -2242,3 +1827,285 @@ class IcebreakerEngine:
         df.write.mode("overwrite").saveAsTable(target)
         rows = self.spark.table(target).count()
         return RunResult(name, "seed", target, rows, time.time() - start)
+
+
+# ---------------------------------------------- kind → handler table
+# Each handler takes (engine, statement) and returns the statement's
+# result, or None to hand the statement to the query path.
+def _stage(engine, sql):
+    """Local internal stages (r13, stages.py): CREATE/DROP/DESC STAGE,
+    SHOW STAGES, PUT/GET/LIST/REMOVE @stage, COPY INTO @stage unload;
+    a named FILE_FORMAT reference inlines from the session registry."""
+    if re.search(r"\bFILE_FORMAT\b", sql, re.IGNORECASE):
+        sql = file_formats.resolve_format_name(engine, sql)
+    return stages.dispatch(engine, sql)
+
+
+def _create_sequence(engine, sql):
+    cs = parse_create_sequence(sql)
+    if cs is None:
+        return None
+    name, start, inc, replace, ine = cs
+    created = create_sequence(engine, name, start, inc, replace, ine)
+    status = (f"Sequence {name.upper()} successfully created." if created
+              else f"Sequence {name.upper()} already exists, statement "
+              "skipped.")
+    return engine.spark.createDataFrame([(status,)], "status string")
+
+
+def _drop_sequence(engine, sql):
+    name, if_exists = parse_drop_sequence(sql)
+    if name in engine._sequences:
+        del engine._sequences[name]
+        msg = f"{name.upper()} successfully dropped."
+    elif if_exists:
+        msg = (f"Drop statement executed successfully "
+               f"({name.upper()} already dropped).")
+    else:
+        raise ValueError(
+            f"DROP SEQUENCE: unknown sequence {name!r} — use IF EXISTS")
+    return engine.spark.createDataFrame([(msg,)], "status string")
+
+
+def _describe_sequence(engine, sql):
+    words = sql.upper().split(None, 4)
+    if len(words) < 3:
+        return None
+    nm = words[2].strip('"').lower().rstrip(";")
+    sq = engine._sequences.get(nm)
+    if sq is None:
+        raise ValueError(
+            f"DESCRIBE SEQUENCE: unknown sequence {nm!r} (session "
+            f"sequences: {', '.join(sorted(engine._sequences)) or 'none'})")
+    return engine.spark.createDataFrame(
+        [(sq.name, sq.start, sq.increment, sq.next)],
+        "name string, start bigint, increment bigint, next_value bigint")
+
+
+def _create_procedure(engine, sql):
+    proc = parse_create_procedure(sql)
+    if proc is None:
+        return None
+    register_procedure(engine, proc, proc.replace)
+    return engine.spark.createDataFrame(
+        [(proc.name, f"Procedure {proc.name} successfully created.")],
+        "name string, status string",
+    )
+
+
+def _drop_procedure(engine, sql):
+    dp = parse_drop_procedure(sql)
+    dropped = drop_procedure(engine, *dp)
+    return engine.spark.createDataFrame(
+        [(dp[0], "dropped" if dropped else "skipped (not found)")],
+        "name string, status string",
+    )
+
+
+def _alter_session(engine, sql):
+    """ALTER SESSION SET/UNSET for the parameters with a faithful Spark
+    mapping: TIMEZONE → the session timezone conf (affects
+    CURRENT_TIMESTAMP, TO_TIMESTAMP renders…), QUERY_TAG → recorded
+    (observability tag, no semantics). Every OTHER parameter keeps the
+    transpiler's actionable refusal — silently accepting e.g.
+    WEEK_START would CHANGE answers (r9 batch 3)."""
+    m = re.match(
+        r"(?is)\s*ALTER\s+SESSION\s+SET\s+(\w+)\s*=\s*"
+        r"(?:'([^']*)'|(\S+))\s*;?\s*$", sql)
+    mu = re.match(r"(?is)\s*ALTER\s+SESSION\s+UNSET\s+(\w+)\s*;?\s*$", sql)
+    pname = (m.group(1) if m else mu.group(1) if mu else "").upper()
+    if pname == "TIMEZONE":
+        if m:
+            engine.spark.conf.set("spark.sql.session.timeZone",
+                                  m.group(2) or m.group(3))
+        else:
+            engine.spark.conf.unset("spark.sql.session.timeZone")
+        return engine.spark.createDataFrame(
+            [("timezone",
+              engine.spark.conf.get("spark.sql.session.timeZone"))],
+            "parameter string, value string",
+        )
+    if pname == "QUERY_TAG":
+        tag = (m.group(2) if m and m.group(2) is not None
+               else m.group(3) if m else None)
+        if tag is None:
+            engine._session_vars.pop("query_tag", None)
+        else:
+            engine._session_vars["query_tag"] = engine._render_literal(tag)
+        return engine.spark.createDataFrame(
+            [("query_tag", tag or "")], "parameter string, value string")
+    return None  # the transpiler's named refusal
+
+
+def _alter_table_set(engine, sql):
+    """ALTER TABLE t SET <snowflake parameter> = <value> (r9 batch 4):
+    COMMENT maps to Spark's table property,
+    DATA_RETENTION_TIME_IN_DAYS no-ops naming the engine's own
+    retention, CHANGE_TRACKING refuses naming streaming (it backs
+    STREAM objects), anything else refuses naming the supported set —
+    the Spark grammar forms (SET TBLPROPERTIES/SERDE…) never match this
+    name-=-value shape and pass through untouched."""
+    m = re.match(
+        r"(?is)\s*ALTER\s+TABLE\s+([\w.`\"]+)\s+SET\s+"
+        r"([A-Z_]+)\s*=\s*(?:'((?:[^']|'')*)'|(\S+))\s*;?\s*$", sql)
+    if m is None or m.group(2).upper() in (
+            "TBLPROPERTIES", "SERDEPROPERTIES", "LOCATION"):
+        return None
+    tname, pname = m.group(1), m.group(2).upper()
+    val = (m.group(3).replace("''", "'") if m.group(3) is not None
+           else m.group(4))
+    if pname == "COMMENT":
+        esc = val.replace("'", "''")
+        engine.spark.sql(
+            f"ALTER TABLE {tname} SET TBLPROPERTIES ('comment' = '{esc}')")
+        return engine.spark.createDataFrame(
+            [("comment", val)], "parameter string, value string")
+    if pname == "DATA_RETENTION_TIME_IN_DAYS":
+        return engine.spark.createDataFrame(
+            [(pname.lower(), "noop: retention here is the engine's "
+              "session-scoped UNDROP ledger (last "
+              f"{engine._drop_retention} drops), not a per-table time "
+              "window")],
+            "statement string, status string")
+    if pname == "CHANGE_TRACKING":
+        raise ValueError(
+            "ALTER TABLE … SET CHANGE_TRACKING: change tracking backs "
+            "STREAM objects, which have no Spark equivalent — use "
+            "Structured Streaming (streaming.stream_incremental_append) "
+            "for change capture"
+        )
+    raise ValueError(
+        f"ALTER TABLE … SET {pname}: unsupported table parameter — "
+        "COMMENT (mapped to the table property) and DATA_RETENTION_"
+        "TIME_IN_DAYS (no-op; see UNDROP retention) are handled; "
+        "Spark-native forms (SET TBLPROPERTIES …) pass through"
+    )
+
+
+def _show_parameters(engine, sql):
+    """SHOW PARAMETERS [LIKE 'p'] [IN …] → Spark's conf listing (SET -v
+    shape: key, value, meaning); the IN scope is dropped — one engine,
+    one scope."""
+    df = engine.spark.sql("SET -v")
+    m = re.search(r"(?i)\bLIKE\s+'([^']*)'", sql)
+    if m:
+        from pyspark.sql import functions as F
+
+        df = df.filter(F.lower(F.col("key")).like(m.group(1).lower()))
+    return df
+
+
+def _show_variables(engine, sql):
+    """The session variables set via SET name = … (stored as literal
+    TEXT for substitution; string literals display unquoted like
+    Snowflake)."""
+    def display(v: str) -> str:
+        if len(v) >= 2 and v[0] == v[-1] == "'":
+            return v[1:-1].replace("''", "'")
+        return v
+
+    return engine.spark.createDataFrame(
+        [(k, display(v)) for k, v in sorted(engine._session_vars.items())],
+        "name string, value string",
+    )
+
+
+def _copy_into(engine, sql):
+    """COPY INTO <table>: named file formats inline from the session
+    registry, FROM @stage resolves to the stage's directory (r13), then
+    the transformation COPY (FROM (SELECT $1, … FROM @stage|'<path>'))
+    or the path-form loader runs."""
+    raw = sql
+    if re.search(r"\bFORMAT_NAME\b|FILE_FORMAT\s*=\s*(?!\()", sql,
+                 re.IGNORECASE):
+        sql = file_formats.resolve_format_name(engine, sql)
+    if re.search(r"\bFROM\s+'?@", sql, re.IGNORECASE):
+        sql = stages.resolve_copy_into_stage(engine, sql) or sql
+    tspec = parse_transform_copy(sql)
+    if tspec is not None:
+        src = tspec.src.strip("'")
+        if src.startswith("@"):
+            stage, sub = stages._resolve_ref(engine, src)
+            src = os.path.join(stage.path, sub) if sub else stage.path
+        stats = _classified(raw, run_transform_copy, engine.spark, tspec,
+                            engine.transpiler, src)
+    else:
+        spec = parse_copy_into(sql)
+        if spec is None:
+            return None
+        stats = _classified(raw, run_copy_into, engine.spark, spec)
+    return engine.spark.createDataFrame(
+        [(stats["table"], stats["rows_loaded"], stats["format"])],
+        "table string, rows_loaded long, format string",
+    )
+
+
+def _stats_handler(parse, run):
+    """Handler for a parse_*/run_* pair whose run returns a
+    ``{"table", "rows_affected"}`` stats dict."""
+    def handle(engine, sql):
+        spec = parse(sql)
+        if spec is None:
+            return None
+        stats = _classified(sql, run, engine, spec)
+        return engine.spark.createDataFrame(
+            [(stats["table"], stats["rows_affected"])],
+            "table string, rows_affected long",
+        )
+
+    return handle
+
+
+def _run_update(engine, spec):
+    # UPDATE … FROM is lowered onto the merge machinery
+    run = (run_merge_statement if isinstance(spec, MergeSpec)
+           else run_update_statement)
+    return run(engine.spark, spec, engine.transpiler)
+
+
+_HANDLERS = {
+    "set_var": IcebreakerEngine._maybe_set_session_var,
+    "file_format": file_formats.dispatch,
+    "stage": _stage,
+    "create_sequence": _create_sequence,
+    "drop_sequence": _drop_sequence,
+    "show_sequences": lambda engine, sql: show_sequences(engine),
+    "describe_sequence": _describe_sequence,
+    "create_procedure": _create_procedure,
+    "drop_procedure": _drop_procedure,
+    "call": lambda engine, sql: run_call(engine, *parse_call(sql)),
+    "show_procedures": lambda engine, sql: show_procedures(engine),
+    "undrop": IcebreakerEngine._maybe_undrop,
+    # DROP TABLE → rename-based retention (views, missing tables and
+    # 3-part names take Spark's native DROP)
+    "drop_table": IcebreakerEngine._maybe_drop_table,
+    "alter_session": _alter_session,
+    "alter_table_set": _alter_table_set,
+    "show_parameters": _show_parameters,
+    "show_variables": _show_variables,
+    "describe_result": IcebreakerEngine._describe_result,
+    "swap_with": _stats_handler(
+        parse_swap_with, lambda e, s: run_swap_with(e.spark, *s)),
+    "insert_all": _stats_handler(
+        parse_insert_all,
+        lambda e, s: run_insert_all(e.spark, s, e.transpiler, e.execute)),
+    # CREATE OR REPLACE TABLE: Spark's REPLACE TABLE needs a DSv2
+    # catalog — lower onto the overwrite-write staged swap the table
+    # materialization uses
+    "create_or_replace_table": _stats_handler(
+        parse_create_or_replace_table,
+        lambda e, s: run_create_or_replace_table(
+            e.spark, s, e.transpiler, e.execute)),
+    "alter_columns": _stats_handler(
+        parse_alter_columns, lambda e, s: run_alter_columns(e.spark, s)),
+    # row-level DML on parquet tables lowers onto the staged rewrite
+    # (DELETE/UPDATE/MERGE all share the swap machinery)
+    "delete": _stats_handler(
+        parse_delete,
+        lambda e, s: run_delete_statement(e.spark, s, e.transpiler)),
+    "update": _stats_handler(parse_update, _run_update),
+    "merge": _stats_handler(
+        parse_merge,
+        lambda e, s: run_merge_statement(e.spark, s, e.transpiler)),
+    "copy_into": _copy_into,
+}

@@ -292,14 +292,14 @@ def sessionize_batch(
 ) -> DataFrame:
     """Batch rendering of the same session semantics (oracle-checkable
     and the backfill path): gap-based sessionization via the classic
-    lag/cumsum window idiom — no Python in the loop."""
+    lag/cumsum window idiom — no Python in the loop. Gaps compare as
+    exact microsecond intervals, like session_window and the oracle."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy("ts")
+    micros = F.unix_micros(F.col("ts").cast("timestamp"))
     gap = F.when(
-        (F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w)))
-        > gap_seconds,
-        1,
+        micros - F.lag(micros).over(w) > gap_seconds * 1_000_000, 1
     ).otherwise(0)
     sess = events.withColumn("new_session", gap).withColumn(
         "session_id", F.sum("new_session").over(w)

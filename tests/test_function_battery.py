@@ -907,7 +907,7 @@ class TestToQueryR8:
 
 
 R8C_CASES = [
-    # r8 sweep lock-ins (scripts/probe_sweep_r8a.py + adversarial
+    # r8 sweep lock-ins (the r8a probe sweep + adversarial
     # probes): EDITDISTANCE NULL cap must propagate NULL (greatest()
     # skips NULLs — the nvl2 guard), runtime-negative caps clamp to 0
     ("SELECT EDITDISTANCE('ab', 'cd', NULL) IS NULL", True),

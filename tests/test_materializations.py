@@ -3147,7 +3147,7 @@ class TestTimeTravelR7:
 
 
 class TestR7bSweep:
-    """Round-7b probe-sweep lock-ins (scripts/probe_sweep_r7b.py, 16
+    """Round-7b probe-sweep lock-ins (the r7b probe sweep, 16
     executed materialization/session shapes) — snapshot hard-delete/
     re-add/NULL transitions, incremental NULL-key merge and schema
     evolution, session-variable actionability (sweep finding)."""
@@ -3581,6 +3581,154 @@ class TestAlterSessionSubsetR9:
     def test_other_params_keep_refusal(self, engine):
         with pytest.raises(Exception, match="TIMEZONE"):
             engine.execute("ALTER SESSION SET WEEK_START = 1")
+
+
+_COMMENT_PREFIXES = ("", "-- c\n", "/* c */ ")
+
+
+class TestStatementKinds:
+    """The statement classifier reads code tokens, so comments and
+    identifiers/strings that spell a head keyword never change what a
+    statement is."""
+
+    @pytest.mark.parametrize("sql,kind", [
+        ("SET v = 1", "set_var"),
+        ("UNSET v", "set_var"),
+        ("CREATE OR REPLACE FILE FORMAT f TYPE = CSV", "file_format"),
+        ("SHOW FILE FORMATS", "file_format"),
+        ("DESCRIBE FILE FORMAT f", "file_format"),
+        ("CREATE TEMPORARY STAGE s", "stage"),
+        ("SHOW STAGES", "stage"),
+        ("DESC STAGE s", "stage"),
+        ("PUT file:///tmp/x.csv @s", "stage"),
+        ("GET @s file:///tmp/", "stage"),
+        ("LIST @s", "stage"),
+        ("RM @s/x", "stage"),
+        ("COPY INTO @s FROM t", "stage"),
+        ("COPY INTO '@s/p' FROM t", "stage"),
+        ("CREATE OR REPLACE SEQUENCE q", "create_sequence"),
+        ("DROP SEQUENCE IF EXISTS q", "drop_sequence"),
+        ("SHOW TERSE SEQUENCES", "show_sequences"),
+        ("DESC SEQUENCE q", "describe_sequence"),
+        ("CREATE PROCEDURE p() RETURNS INT AS $$ SELECT 1 $$",
+         "create_procedure"),
+        ("DROP PROCEDURE p()", "drop_procedure"),
+        ("CALL p(1)", "call"),
+        ("SHOW PROCEDURES", "show_procedures"),
+        ("BEGIN", "transaction"),
+        ("COMMIT;", "transaction"),
+        ("ROLLBACK WORK", "transaction"),
+        ("UNDROP TABLE t", "undrop"),
+        ("DROP TABLE IF EXISTS t", "drop_table"),
+        ("GRANT SELECT ON t TO ROLE r", "grant"),
+        ("REVOKE SELECT ON t FROM ROLE r", "grant"),
+        ("CREATE OR REPLACE ROLE r", "principal"),
+        ("ALTER USER u SET DEFAULT_ROLE = 'r'", "principal"),
+        ("USE WAREHOUSE wh", "use_noop"),
+        ("USE SECONDARY ROLES ALL", "use_noop"),
+        ("ALTER SESSION SET TIMEZONE = 'UTC'", "alter_session"),
+        ("DROP WAREHOUSE wh", "warehouse"),
+        ("ALTER TABLE t RESUME RECLUSTER", "recluster"),
+        ("ALTER TABLE db.t SET COMMENT = 'x'", "alter_table_set"),
+        ("ALTER TABLE `db`.`t` SET COMMENT = 'x'", "alter_table_set"),
+        ("ALTER TABLE a SWAP WITH b", "swap_with"),
+        ("ALTER TABLE t RENAME COLUMN a TO b", "alter_columns"),
+        ("SHOW PARAMETERS LIKE 'x'", "show_parameters"),
+        ("DESC RESULT LAST_QUERY_ID()", "describe_result"),
+        ("SHOW GRANTS ON TABLE t", "show_empty"),
+        ("SHOW FUTURE GRANTS IN SCHEMA s", "show_empty"),
+        ("SHOW TERSE ROLES", "show_empty"),
+        ("SHOW VARIABLES", "show_variables"),
+        ("SHOW STREAMS", "show_refuse"),
+        ("SHOW TERSE STAGES", "show_refuse"),
+        ("SHOW STAGES LIKE 's%'", "show_refuse"),
+        ("DESCRIBE TASK t", "describe_refuse"),
+        ("DESC STAGE s extra", "describe_refuse"),
+        ("DESCRIBE WAREHOUSE w", "describe_noop"),
+        ("INSERT ALL INTO a SELECT 1", "insert_all"),
+        ("INSERT OVERWRITE FIRST WHEN 1 = 1 THEN INTO a SELECT 1",
+         "insert_all"),
+        ("CREATE OR REPLACE TABLE t AS SELECT 1 AS a",
+         "create_or_replace_table"),
+        ("CREATE OR REPLACE TRANSIENT TABLE t (a INT)",
+         "create_or_replace_table"),
+        ("DELETE FROM t WHERE a = 1", "delete"),
+        ("UPDATE t SET a = 1", "update"),
+        ("MERGE INTO t USING s ON t.a = s.a WHEN MATCHED THEN DELETE",
+         "merge"),
+        ("COPY INTO t FROM @s", "copy_into"),
+        ("COPY INTO t FROM '/tmp/x/' FILE_FORMAT = (TYPE = CSV)",
+         "copy_into"),
+        # near-misses: a query that merely mentions a head keyword
+        ("SELECT stage, sequence FROM t", "query"),
+        ("SELECT materialized FROM t", "query"),
+        ("SELECT * FROM t PIVOT (SUM(v) FOR k IN ('a'))", "query"),
+        ("SELECT * FROM t MATCH_RECOGNIZE (PATTERN (a) DEFINE a AS TRUE)",
+         "query"),
+        ("SELECT 'PUT ' AS put, 'FILE FORMAT' AS ff", "query"),
+        ("SELECT 1 AS grant_count, 'DROP TABLE t' AS s", "query"),
+        ("WITH stage AS (SELECT 1 AS a) SELECT * FROM stage", "query"),
+        ("INSERT INTO t SELECT 1", "query"),
+        ("CREATE TABLE t AS SELECT 1 AS a", "query"),
+        ("DROP VIEW v", "query"),
+        ("USE SCHEMA s", "query"),
+        ("-- only a comment", "query"),
+    ])
+    def test_kind(self, sql, kind):
+        from dbt_icebreaker_spark.runner import _statement_kind
+
+        for prefix in _COMMENT_PREFIXES:
+            assert _statement_kind(prefix + sql)[0] == kind, prefix + sql
+
+    @pytest.mark.parametrize("sql", [
+        "GRANT SELECT ON TABLE t TO ROLE r",
+        "USE WAREHOUSE wh",
+        "SHOW GRANTS",
+        "SHOW FUTURE GRANTS IN SCHEMA mat_test",
+        "CREATE ROLE r",
+        "CREATE OR REPLACE ROLE r",
+        "SHOW ROLES",
+        "SHOW VARIABLES",
+        "BEGIN TRANSACTION",
+        "CREATE WAREHOUSE wh",
+        "DESCRIBE WAREHOUSE wh",
+        "ALTER TABLE t SUSPEND RECLUSTER",
+        "SHOW SEQUENCES",
+        "SHOW PROCEDURES",
+        "SHOW STAGES",
+        "SHOW FILE FORMATS",
+        "SET kind_var = 1",
+    ])
+    def test_leading_comment_same_result(self, engine, sql):
+        results = []
+        for prefix in _COMMENT_PREFIXES:
+            df = engine.execute(prefix + sql)
+            results.append((df.columns, df.collect()))
+        assert results[1] == results[0] and results[2] == results[0]
+
+    def test_leading_comment_alter_session_timezone(self, spark, engine):
+        prev = spark.conf.get("spark.sql.session.timeZone")
+        try:
+            for prefix in _COMMENT_PREFIXES:
+                r = engine.execute(
+                    prefix + "ALTER SESSION SET TIMEZONE = 'Asia/Tokyo'")
+                assert r.columns == ["parameter", "value"]
+                assert spark.conf.get(
+                    "spark.sql.session.timeZone") == "Asia/Tokyo"
+                spark.conf.set("spark.sql.session.timeZone", prev)
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", prev)
+
+    @pytest.mark.parametrize("prefix", _COMMENT_PREFIXES)
+    def test_leading_comment_drop_then_undrop(self, spark, engine, prefix):
+        engine.execute(
+            "CREATE OR REPLACE TABLE mat_test.kind_drop AS SELECT 7 AS x")
+        r = engine.execute(prefix + "DROP TABLE mat_test.kind_drop")
+        assert r.columns == ["table", "status"]
+        assert not spark.catalog.tableExists("mat_test.kind_drop")
+        engine.execute(prefix + "UNDROP TABLE mat_test.kind_drop")
+        assert spark.table("mat_test.kind_drop").collect()[0].x == 7
+        engine.execute("DROP TABLE mat_test.kind_drop")
 
 
 class TestUndropGhostR9:

@@ -605,7 +605,7 @@ class TestLoadProjectReviewFixes:
 
 
 class TestR7cStreamingEdges:
-    """Round-7c streaming sweep lock-ins (scripts/probe_sweep_r7c.py,
+    """Round-7c streaming sweep lock-ins (the r7c probe sweep,
     9 executed edges, all green — semantics pinned so they can't
     drift): NULL-key dedup parity, exact session-gap boundaries,
     inclusive attribution horizon, append-mode subset contract."""
@@ -641,6 +641,28 @@ class TestR7cStreamingEdges:
         # the session; one second past it opens a new one — and the
         # batch and native renderings agree
         assert b.count() == 2 and n.count() == 2
+
+    def test_session_gap_sub_second_over_boundary(self, spark):
+        from dbt_icebreaker_spark.streaming.pipeline import (
+            sessionize_batch,
+            sessionize_native,
+        )
+
+        df = spark.createDataFrame(
+            [(1, "2026-01-01 10:00:00.100000", 1.0),
+             # 1800.5 s later: past the gap, though the whole-second
+             # timestamps are exactly gap apart
+             (1, "2026-01-01 10:30:00.600000", 1.0),
+             # 1799.9 s later: the same session
+             (1, "2026-01-01 11:00:00.500000", 1.0)],
+            "user_id long, ts string, value double",
+        ).selectExpr("user_id", "CAST(ts AS TIMESTAMP) ts", "value")
+        b = sessionize_batch(df, gap_seconds=1800)
+        n = sessionize_native(df, gap_seconds=1800)
+        # a gap over gap_seconds by less than a second still opens a
+        # new session, in both renderings
+        assert sorted(r.n_events for r in b.collect()) == [1, 2]
+        assert sorted(r.n_events for r in n.collect()) == [1, 2]
 
     def test_attribution_horizon_inclusive(self, spark):
         from dbt_icebreaker_spark.streaming.pipeline import (

@@ -953,7 +953,7 @@ class TestUnquotedProcTrailingR7:
 
 
 class TestR7aSweep:
-    """Round-7 probe-sweep lock-ins (scripts/probe_sweep_r7a.py, 69
+    """Round-7 probe-sweep lock-ins (the r7a probe sweep, 69
     executed shapes): variable/column collisions in every expression
     position, variable-parameterized cursors, CALL in loops, RESULTSET
     reassignment + TABLE(rs) in embedded SQL (sweep finding), VARIANT
