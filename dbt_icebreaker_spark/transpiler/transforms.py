@@ -8163,6 +8163,17 @@ def detect_unsupported_scalars(sql: str) -> list[tuple[str, str]]:
     return sorted(set(found))
 
 
+def minhash_component(i: int, value: str) -> str:
+    """SQL text of MinHash component ``i`` over the SQL expression
+    ``value``: the lexicographic min of ``md5(i || ':' || value)``.
+    md5-as-hex-string keeps every engine's rendering identical (no
+    integer-hash overflow games), and its uniformity makes the string
+    min a valid permutation surrogate. The one definition of the hash
+    family: the MINHASH aggregate below and the signature stage of
+    xops/dedup.py both render it."""
+    return f"min(md5(concat_ws(':', {i}, {value})))"
+
+
 # the element comparator is an IF, not least()/greatest(): this
 # rewrite runs BEFORE rewrite_simple_renames, which now maps those
 # names onto the NULL-propagating Snowflake forms — the fold's lambda
@@ -8178,9 +8189,10 @@ _MINHASH_FOLD = (
 
 def rewrite_minhash(tokens: Tokens) -> Tokens:
     """Snowflake MinHash sketch aggregates → pure-JVM Spark SQL, on the
-    SAME hash family as the Python kernel (xops/dedup.py:110:
-    ``min(md5(i || ':' || value))`` per component) so SQL-built states
-    and `minhash_signatures` outputs agree component-for-component.
+    SAME hash family as xops/dedup.py's signature stage
+    (``minhash_component``: ``min(md5(i || ':' || value))`` per
+    component) so SQL-built states and `minhash_signatures` outputs
+    agree component-for-component.
 
     - ``MINHASH(k, expr)``: array of k per-seed min-hash aggregates —
       map-side partial like any MIN.
@@ -8224,9 +8236,7 @@ def rewrite_minhash(tokens: Tokens) -> Tokens:
                     "sketches expand to too many aggregate expressions"
                 )
             e = render(tokens[args[1][0]:args[1][1]]).strip()
-            mins = ", ".join(
-                f"min(md5(concat_ws(':', {j}, ({e}))))" for j in range(k)
-            )
+            mins = ", ".join(minhash_component(j, f"({e})") for j in range(k))
             repl = f"array({mins})"
         else:
             if len(args) != 1:

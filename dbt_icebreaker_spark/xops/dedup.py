@@ -5,6 +5,19 @@ every step is reproducible in ANSI SQL for the DuckDB oracle — and
 md5-as-string preserves uniformity, so lexicographic min is a valid
 MinHash permutation surrogate.
 
+The MinHash/LSH pipeline has ONE SQL source per stage — a fragment
+builder over a relation name: shingle explode (``_shingle_sql``),
+per-seed signature (``_sig_sql``, rendering the hash family
+``transpiler.transforms.minhash_component`` that the SQL ``MINHASH``
+aggregate renders too), band key (``_band_sql``) and bucket pairs
+with the hot-bucket star fallback (``_pairs_sql``).
+``minhash_signatures`` and ``minhash_lsh_pairs`` compose the fragments
+into one statement (one Catalyst analysis pass); ``word_shingles``,
+``signatures_from_shingles``, ``band_keys`` and
+``pairs_from_signatures`` run one stage over a temp view of a frame
+(``sql_over``) for the operators that join stage outputs themselves
+(x25, x28, x37, x39, x46).
+
 Scale design notes:
 - shingling explodes O(tokens) rows but immediately re-aggregates per
   (doc, seed) with map-side partial min — shuffle carries only
@@ -19,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..transpiler.transforms import minhash_component
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -35,74 +50,27 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingles_of(words_col, k: int):
-    """Column expr: DISTINCT k-gram array from a word-array column.
-    slice+array_join, NOT k element_at calls — codegen does no CSE
-    across lambda boundaries, so per-element expressions re-evaluate
-    whatever produced the array once per call (k× per gram); slice
-    touches it once per gram. Bind the array as a projected attribute
-    when possible (word_shingles does) so it's computed once per row."""
-    # 1-based start positions; guard size >= k because Spark's
-    # sequence(1, 0) counts DOWN (would yield bogus indices)
-    return F.array_distinct(
-        F.when(
-            F.size(words_col) >= k,
-            F.transform(
-                F.sequence(F.lit(1), F.size(words_col) - (k - 1)),
-                lambda i: F.array_join(F.slice(words_col, i, k), " "),
-            ),
-        )
-    )
-
-
-def shingle_array(text_col, k: int):
-    """Column expr: DISTINCT word k-gram array for one document —
-    dedup happens per-row with array_distinct, so shingling needs NO
-    shuffle (vs explode+distinct, which shuffles every shingle
-    instance)."""
-    return shingles_of(F.split(text_col, " "), k)
-
-
-def _shingle_par(df: DataFrame) -> int | None:
-    """Partition count for the pre-shingle text repartition, or None
-    to skip it (r14). Document corpora often arrive as few large files
-    (the testdata: one), where the CPU-heavy shingle fan-out would run
-    on as many cores as there are input splits — there the shuffle
-    pays for itself. An input that already scans wide gains nothing:
-    every doc's shingles live in one row, so the per-doc min-signature
-    partial aggregation is already complete map-side and the only
-    required shuffle is n_docs × n_hashes partial rows — repartitioning
-    would move the FULL corpus text first, the §8 shuffle-the-payload
-    mistake. Probe = input file count: analysis-only and cheap, where
-    an .rdd partition probe would physical-plan the input and fire its
-    broadcast jobs eagerly on composed inputs (measured on x38).
-    Non-file inputs (local test frames, checkpoints) report zero files
-    and keep the repartition — the conservative default."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        if len(df.inputFiles()) >= par:
-            return None
-    except Exception:
-        pass
-    return par
-
-
-def word_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """Distinct word k-grams per document: (id, shingle). JVM-side only
-    (split/sequence/transform), no Python UDF.
-
-    Few-file inputs are repartitioned to full parallelism first (see
-    _shingle_par — wide inputs skip the text shuffle entirely)."""
-    par = _shingle_par(df)
-    if par is not None:
-        df = df.repartition(par, F.col(id_col))
+def word_grams_sql(words: str, k: int) -> str:
+    """SQL text of the word k-gram array of the word-array column
+    ``words`` (every occurrence, in order; NULL below k words — the
+    size guard matters because Spark's sequence(1, 0) counts DOWN).
+    slice+array_join, NOT k element_at calls. ``words`` must name a
+    projected attribute: codegen does no CSE across lambda boundaries,
+    so an inline split(...) would re-run once per gram — bind the word
+    array once per row first (every caller does)."""
     return (
-        df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__words"))
-        .select(
-            F.col(id_col), F.explode(shingles_of(F.col("__words"), k)).alias("shingle")
-        )
-        .where(F.col("shingle") != "")
+        f"CASE WHEN size({words}) >= {k} THEN transform("
+        f"sequence(1, size({words}) - {k - 1}), "
+        f"i -> array_join(slice({words}, i, {k}), ' ')) END"
     )
+
+
+def shingles_of(words: str, k: int):
+    """Column expr: DISTINCT word k-gram array of the bound word-array
+    column ``words`` (see word_grams_sql) — dedup happens per row with
+    array_distinct, so shingling needs NO shuffle (vs explode+distinct,
+    which shuffles every shingle instance)."""
+    return F.expr(f"array_distinct({word_grams_sql(words, k)})")
 
 
 def _bq(name: str) -> str:
@@ -113,48 +81,186 @@ def _bq(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _shingle_sql(
-    view: str, id_col: str, text_col: str, k: int, par: int
-) -> str:
-    """SQL text of the distinct-word-k-gram explode over a temp view —
-    the word_shingles pipeline as one subquery (expressions verbatim),
-    shared by the one-statement renderings below."""
+def sql_over(build, *frames: DataFrame) -> DataFrame:
+    """``spark.sql(build(*views))`` with each frame registered as a
+    uniquely named temp view. The result is analyzed eagerly, so the
+    views are dropped before it returns — no name outlives the call or
+    collides with a concurrent caller's. They are dropped from the
+    session catalog directly: ``spark.catalog.dropTempView`` also
+    uncaches the view's plan, which would unpersist a persisted input
+    frame (x25's shingles) behind its caller's back."""
+    import uuid
+
+    spark = frames[0].sparkSession
+    views = [f"__sql_over_{uuid.uuid4().hex[:12]}" for _ in frames]
+    for view, frame in zip(views, frames):
+        frame.createOrReplaceTempView(view)
+    try:
+        return spark.sql(build(*views))
+    finally:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for view in views:
+            catalog.dropTempView(view)
+
+
+def _spread_par(df: DataFrame) -> int | None:
+    """Partition count to spread a narrow input across before a
+    CPU-heavy per-row stage, or None when it already scans wide.
+    Corpora often arrive as few large files (the testdata: one), where
+    the stage would run on as many cores as there are input splits —
+    there the shuffle pays for itself; an input scanning from at least
+    defaultParallelism files gains nothing from moving its payload.
+    Probe = input file count: analysis-only, launches no job, where an
+    .rdd partition probe physical-plans the input and fires its
+    broadcast jobs eagerly on composed inputs (measured on x38).
+    Non-file inputs (local test frames, checkpoints) report zero files
+    and get the shuffle — the conservative default."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        if len(df.inputFiles()) >= par:
+            return None
+    except Exception:
+        pass
+    return par
+
+
+def _shingle_sql(rel: str, id_col: str, text_col: str, k: int, par: int) -> str:
+    """Stage 1, shingle explode: distinct word k-grams per document,
+    (id, shingle) over relation ``rel``. The text is first
+    hash-repartitioned on the id to ``par`` (defaultParallelism)
+    partitions, so the CPU-heavy fan-out runs on every core however
+    few files the corpus arrives in. Unconditional: skipping it on
+    inputs that already scan wide measured no faster (SCALE.md, 10×
+    documents in 16 files)."""
     idq, txtq = _bq(id_col), _bq(text_col)
     return f"""
           SELECT {idq}, shingle
           FROM (SELECT /*+ REPARTITION({par}, {idq}) */
                        {idq}, split({txtq}, ' ') AS __words
-                FROM {view})
-          LATERAL VIEW explode(
-            CASE WHEN size(__words) >= {k}
-                 THEN array_distinct(transform(
-                        sequence(1, size(__words) - {k - 1}),
-                        i -> array_join(slice(__words, i, {k}), ' ')))
-            END) t AS shingle
+                FROM {rel})
+          LATERAL VIEW explode(array_distinct({word_grams_sql('__words', k)})) t
+            AS shingle
           WHERE shingle != ''
     """
 
 
-def _shingle_sig_sql(
-    view: str, id_col: str, text_col: str, n_hashes: int, k: int, par: int
-) -> str:
-    """SQL text of the shingle→md5→min-signature pipeline over a temp
-    view — shared by minhash_signatures and minhash_lsh_pairs so the
-    whole chain is ONE Catalyst analysis pass (see minhash_lsh_pairs).
-    Expressions mirror word_shingles/signatures_from_shingles exactly."""
-    sig_cols = ",\n                 ".join(
-        f"min(md5(concat_ws(':', {i}, shingle))) AS `{i}`"
-        for i in range(n_hashes)
-    )
+def _sig_sql(rel: str, id_col: str, n_hashes: int) -> str:
+    """Stage 2, signature: one wide row per doc, ``(id, "0".."n-1")``,
+    component i = minhash_component(i, shingle) over the (id, shingle)
+    relation ``rel``. Shape: explode + groupBy rather than n array_min
+    projections over a shared shingle-array column — Catalyst's
+    projection collapse would inline (= recompute) the shingling into
+    every signature expression; the explode materializes each shingle
+    exactly once, and the n mins run as parallel partial aggregates
+    map-side, so the groupBy shuffle carries only n_docs rows."""
     idq = _bq(id_col)
+    cols = ",\n               ".join(
+        f"{minhash_component(i, 'shingle')} AS `{i}`" for i in range(n_hashes)
+    )
     return f"""
-        WITH sh AS (
-          {_shingle_sql(view, id_col, text_col, k, par)}
-        )
         SELECT {idq},
-               {sig_cols}
-        FROM sh GROUP BY {idq}
+               {cols}
+        FROM {rel} GROUP BY {idq}
     """
+
+
+def _band_sql(rel: str, id_col: str, n_hashes: int, bands: int) -> str:
+    """Stage 3, band key: (id, band, band_key) rows from the wide
+    signature relation ``rel`` — band_key = md5 of the band's
+    r=n_hashes/bands consecutive signature values. One explode instead
+    of a bands-way union: the signature subtree is computed once, not
+    ``bands`` times."""
+    r = n_hashes // bands
+    structs = ",\n                 ".join(
+        f"named_struct('band', {b}, 'band_key', md5(concat_ws('|', {b}, "
+        + ", ".join(f"`{b * r + j}`" for j in range(r))
+        + ")))"
+        for b in range(bands)
+    )
+    return f"""
+        SELECT {_bq(id_col)}, bk.band AS band, bk.band_key AS band_key
+        FROM {rel}
+        LATERAL VIEW explode(array(
+                 {structs})) t AS bk
+    """
+
+
+def _pairs_sql(rel: str, id_col: str, max_bucket_size: int) -> str:
+    """Stage 4, bucket pairs: (doc_a, doc_b) distinct, doc_a < doc_b,
+    for docs sharing a (band, band_key) bucket of the banded relation
+    ``rel``. Group-collect instead of self-join: the signature subtree
+    is evaluated ONCE (a self-join would recompute it per side), and
+    in-bucket pairs are a double explode of the sorted member list.
+    Bucket size and anchor come from one window shuffle. Buckets past
+    ``max_bucket_size`` degrade to star pairs (anchor, id) — see
+    minhash_lsh_pairs."""
+    return f"""
+        WITH ranked AS (
+          SELECT __id, band, band_key,
+                 COUNT(*) OVER (PARTITION BY band, band_key) AS __sz,
+                 MIN(__id) OVER (PARTITION BY band, band_key) AS __anchor
+          FROM (SELECT {_bq(id_col)} AS __id, band, band_key FROM {rel})
+        ),
+        pairs_exact AS (
+          SELECT doc_a, doc_b
+          FROM (SELECT sort_array(collect_list(__id)) AS ids
+                FROM ranked
+                WHERE __sz >= 2 AND __sz <= {max_bucket_size}
+                GROUP BY band, band_key)
+          LATERAL VIEW posexplode(ids) p AS pos, doc_a
+          LATERAL VIEW explode(slice(ids, pos + 2, size(ids))) q AS doc_b
+        ),
+        pairs_star AS (
+          SELECT __anchor AS doc_a, __id AS doc_b
+          FROM ranked
+          WHERE __sz > {max_bucket_size} AND __id != __anchor
+        )
+        SELECT DISTINCT CAST(doc_a AS BIGINT) AS doc_a,
+                        CAST(doc_b AS BIGINT) AS doc_b
+        FROM (SELECT doc_a, doc_b FROM pairs_exact
+              UNION ALL
+              SELECT doc_a, doc_b FROM pairs_star)
+    """
+
+
+def word_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
+    """Distinct word k-grams per document: (id, shingle) — stage 1
+    over ``df``. JVM-side only (split/sequence/transform), no Python
+    UDF."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return sql_over(lambda v: _shingle_sql(v, id_col, text_col, k, par), df)
+
+
+def signatures_from_shingles(
+    sh: DataFrame, id_col: str, n_hashes: int = 8
+) -> DataFrame:
+    """Stage 2 over a precomputed (id, shingle) frame — for pipelines
+    that persist the shingles once for several consumers (x25)."""
+    return sql_over(lambda v: _sig_sql(v, id_col, n_hashes), sh)
+
+
+def band_keys(
+    sig: DataFrame, id_col: str, n_hashes: int = 8, bands: int = 4
+) -> DataFrame:
+    """Stage 3 over a wide signature frame: (id, band, band_key)."""
+    return sql_over(lambda v: _band_sql(v, id_col, n_hashes, bands), sig)
+
+
+def pairs_from_signatures(
+    sig: DataFrame,
+    id_col: str,
+    n_hashes: int = 8,
+    bands: int = 4,
+    max_bucket_size: int = 1000,
+) -> DataFrame:
+    """Stages 3–4 over a precomputed signature frame (see
+    minhash_lsh_pairs for semantics; split out for signature reuse)."""
+    return sql_over(
+        lambda v: _pairs_sql(
+            f"({_band_sql(v, id_col, n_hashes, bands)})", id_col, max_bucket_size
+        ),
+        sig,
+    )
 
 
 def minhash_signatures(
@@ -162,43 +268,16 @@ def minhash_signatures(
 ) -> DataFrame:
     """MinHash signature per doc: sig_i = min over shingles of
     md5(i || ':' || shingle), i in [0, n_hashes). Output:
-    (id, "0".."{n-1}") — one wide row per doc.
-
-    Shape notes: explode + groupBy rather than 8 array_min
-    projections over a shared shingle-array column — Catalyst's
-    projection collapse would inline (= recompute) the shingling into
-    every signature expression; the explode materializes each shingle
-    exactly once, and the n mins run as parallel partial aggregates
-    map-side, so the groupBy shuffle carries only n_docs rows.
-    Rendered as one spark.sql statement (one analysis pass — see
-    minhash_lsh_pairs); signatures_from_shingles remains the
-    DataFrame rendering for precomputed-shingle callers."""
-    import uuid
-
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    view = f"__mh_sig_{uuid.uuid4().hex[:12]}"
-    df.createOrReplaceTempView(view)
-    try:
-        out = spark.sql(
-            _shingle_sig_sql(view, id_col, text_col, n_hashes, shingle_k, par)
-        )
-    finally:
-        spark.catalog.dropTempView(view)
-    return out
-
-
-def signatures_from_shingles(
-    sh: DataFrame, id_col: str, n_hashes: int = 8
-) -> DataFrame:
-    """Signature aggregation over a precomputed (id, shingle) frame —
-    split out so multi-consumer pipelines (jaccard estimate) can
-    persist the shingles once instead of re-shingling per consumer."""
-    aggs = [
-        F.min(F.md5(F.concat_ws(":", F.lit(i), F.col("shingle")))).alias(str(i))
-        for i in range(n_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
+    (id, "0".."{n-1}") — one wide row per doc. Stages 1–2 as one
+    spark.sql statement (one analysis pass — see minhash_lsh_pairs)."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return sql_over(
+        lambda v: _sig_sql(
+            f"({_shingle_sql(v, id_col, text_col, shingle_k, par)})",
+            id_col, n_hashes,
+        ),
+        df,
+    )
 
 
 def minhash_lsh_pairs(
@@ -222,149 +301,21 @@ def minhash_lsh_pairs(
     graph diameter 2 (a chain would stall label propagation), and the
     member list is never materialized.
 
-    The whole pipeline is rendered as ONE spark.sql statement over a
-    temp view of ``df`` (r13 optimization round): the chained
-    DataFrame rendering re-ran Catalyst analysis per transformation
-    (~25 passes, ~0.5 s of driver time per call at sf0.1, paid again
-    by every consumer — x02/x14/x57); one statement is one analysis
-    pass. Expressions are verbatim the same (word_shingles /
-    signatures_from_shingles / band_keys / pairs_from_signatures
-    remain the reference DataFrame rendering for composable callers),
-    so the physical plan and the output are unchanged — oracle-locked.
+    The four stages compose into ONE spark.sql statement over a temp
+    view of ``df`` (r13 optimization round): a chained DataFrame
+    rendering re-ran Catalyst analysis per transformation (~25 passes,
+    ~0.5 s of driver time per call at sf0.1, paid again by every
+    consumer — x02/x14/x57); one statement is one analysis pass.
     """
-    import uuid
+    par = df.sparkSession.sparkContext.defaultParallelism
 
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    r = n_hashes // bands
-    k = shingle_k
-    view = f"__mh_docs_{uuid.uuid4().hex[:12]}"
-    df.createOrReplaceTempView(view)
-    band_structs = ",\n                 ".join(
-        "named_struct('band', {b}, 'band_key', "
-        "md5(concat_ws('|', {b}, {cols})))".format(
-            b=b, cols=", ".join(f"`{b * r + j}`" for j in range(r))
-        )
-        for b in range(bands)
-    )
-    sig_sql = _shingle_sig_sql(view, id_col, text_col, n_hashes, k, par)
-    # signature columns enumerated explicitly (they are known:
-    # `0`..`n_hashes-1`) — `* EXCEPT (col)` needs Spark 3.4+ while the
-    # surrounding code is otherwise version-agnostic (r13 advisor)
-    sig_col_list = ", ".join(f"`{i}`" for i in range(n_hashes))
-    sql = f"""
-        WITH sig AS (
-          SELECT {_bq(id_col)} AS __id, {sig_col_list}
-          FROM ({sig_sql})
-        ),
-        banded AS (
-          SELECT __id, bk.band AS band, bk.band_key AS band_key
-          FROM sig
-          LATERAL VIEW explode(array(
-                 {band_structs})) t AS bk
-        ),
-        ranked AS (
-          SELECT __id, band, band_key,
-                 COUNT(*) OVER (PARTITION BY band, band_key) AS __sz,
-                 MIN(__id) OVER (PARTITION BY band, band_key) AS __anchor
-          FROM banded
-        ),
-        pairs_exact AS (
-          SELECT doc_a, doc_b
-          FROM (SELECT sort_array(collect_list(__id)) AS ids
-                FROM ranked
-                WHERE __sz >= 2 AND __sz <= {max_bucket_size}
-                GROUP BY band, band_key)
-          LATERAL VIEW posexplode(ids) p AS pos, doc_a
-          LATERAL VIEW explode(slice(ids, pos + 2, size(ids))) q AS doc_b
-        ),
-        pairs_star AS (
-          SELECT __anchor AS doc_a, __id AS doc_b
-          FROM ranked
-          WHERE __sz > {max_bucket_size} AND __id != __anchor
-        )
-        SELECT DISTINCT CAST(doc_a AS BIGINT) AS doc_a,
-                        CAST(doc_b AS BIGINT) AS doc_b
-        FROM (SELECT doc_a, doc_b FROM pairs_exact
-              UNION ALL
-              SELECT doc_a, doc_b FROM pairs_star)
-    """
-    try:
-        out = spark.sql(sql)
-    finally:
-        spark.catalog.dropTempView(view)
-    return out
+    def build(v: str) -> str:
+        sh = _shingle_sql(v, id_col, text_col, shingle_k, par)
+        sig = _sig_sql(f"({sh})", id_col, n_hashes)
+        banded = _band_sql(f"({sig})", id_col, n_hashes, bands)
+        return _pairs_sql(f"({banded})", id_col, max_bucket_size)
 
-
-def band_keys(
-    sig: DataFrame, id_col: str, n_hashes: int = 8, bands: int = 4
-) -> DataFrame:
-    """(id, band, band_key) rows from a wide signature frame — band_key
-    = md5 of the band's r=n_hashes/bands consecutive signature values.
-    One explode instead of a bands-way union: the signature subtree is
-    computed once, not ``bands`` times."""
-    r = n_hashes // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|", F.lit(b), *[F.col(str(b * r + j)) for j in range(r)]
-                    )
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return sig.select(F.col(id_col), F.explode(band_structs).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
-    )
-
-
-def pairs_from_signatures(
-    sig: DataFrame,
-    id_col: str,
-    n_hashes: int = 8,
-    bands: int = 4,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """LSH banding over a precomputed signature frame (see
-    minhash_lsh_pairs for semantics; split out for signature reuse)."""
-    banded = band_keys(sig, id_col, n_hashes=n_hashes, bands=bands)
-    # group-collect instead of self-join: the signature subtree is
-    # evaluated ONCE (a self-join would recompute it per side), and
-    # in-bucket pair generation is a double explode of the bucket
-    # member list — bounded by max_bucket_size, so no giant-array row.
-    # Bucket size is computed streaming in the same window shuffle as
-    # the member rank (one exchange, two sorts).
-    size_w = Window.partitionBy("band", "band_key")
-    ranked = banded.withColumn("__sz", F.count("*").over(size_w)).withColumn(
-        "__anchor", F.min(F.col(id_col)).over(size_w)
-    )
-    small_buckets = (
-        ranked.where((F.col("__sz") >= 2) & (F.col("__sz") <= max_bucket_size))
-        .groupBy("band", "band_key")
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
-    )
-    pairs_exact = (
-        small_buckets.select(F.posexplode("ids").alias("pos", "doc_a"), F.col("ids"))
-        .select(
-            F.col("doc_a"),
-            F.explode(F.slice(F.col("ids"), F.col("pos") + 2, F.size("ids"))).alias(
-                "doc_b"
-            ),
-        )
-    )
-    pairs_star = (
-        ranked.where((F.col("__sz") > max_bucket_size) & (F.col(id_col) != F.col("__anchor")))
-        .select(F.col("__anchor").alias("doc_a"), F.col(id_col).alias("doc_b"))
-    )
-    return (
-        pairs_exact.unionByName(pairs_star)
-        .select(F.col("doc_a").cast("long"), F.col("doc_b").cast("long"))
-        .distinct()
-    )
+    return sql_over(build, df)
 
 
 def incremental_lsh_dedup(
@@ -489,21 +440,15 @@ def ngram_jaccard_pairs(
     Output: (doc_a, doc_b, jaccard).
 
     One spark.sql statement over a temp view (one Catalyst analysis
-    pass — see minhash_lsh_pairs); expressions verbatim from the prior
-    DataFrame rendering, oracle-locked."""
-    import uuid
-
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    view = f"__nj_docs_{uuid.uuid4().hex[:12]}"
-    df.createOrReplaceTempView(view)
+    pass — see minhash_lsh_pairs), oracle-locked."""
+    par = df.sparkSession.sparkContext.defaultParallelism
     t = f"CAST({threshold!r} AS DOUBLE)"
     idq = _bq(id_col)
-    sql = f"""
+    return sql_over(lambda v: f"""
         WITH sized AS (
           SELECT {idq}, shingle,
                  COUNT(*) OVER (PARTITION BY {idq}) AS n_sh
-          FROM ({_shingle_sql(view, id_col, text_col, k, par)})
+          FROM ({_shingle_sql(v, id_col, text_col, k, par)})
         )
         SELECT CAST(doc_a AS BIGINT) AS doc_a,
                CAST(doc_b AS BIGINT) AS doc_b,
@@ -520,12 +465,7 @@ def ngram_jaccard_pairs(
                      AND b.n_sh * {t} <= a.n_sh
                     GROUP BY a.{idq}, b.{idq}, a.n_sh, b.n_sh))
         WHERE jaccard >= {t}
-    """
-    try:
-        out = spark.sql(sql)
-    finally:
-        spark.catalog.dropTempView(view)
-    return out
+    """, df)
 
 
 def common_shingle_stats(
@@ -597,9 +537,9 @@ def split_leakage(
     non-train split.
     """
     g = df.select(
-        F.col(id_col),
-        F.col(split_col),
-        F.explode(shingle_array(F.col(text_col), n)).alias("gram"),
+        F.col(id_col), F.col(split_col), F.split(F.col(text_col), " ").alias("__words")
+    ).select(
+        F.col(id_col), F.col(split_col), F.explode(shingles_of("__words", n)).alias("gram")
     ).where(F.col("gram") != "")
     train_grams = (
         g.where(F.col(split_col) == train_name).select("gram").distinct()
@@ -659,20 +599,13 @@ def remove_duplicate_spans(
     words_col = F.split(F.col(text_col), " ")
     # all positioned k-grams (NOT distinct — every occurrence must be
     # removable), 1-based word positions
-    grams = F.when(
-        F.size("__words") >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size("__words") - (k - 1)),
-            lambda i: F.struct(
-                i.alias("pos"),
-                F.array_join(F.slice(F.col("__words"), i, k), " ").alias("shingle"),
-            ),
-        ),
-    ).otherwise(F.array())
     pos_grams = (
         df.select(F.col(id_col), words_col.alias("__words"))
-        .select(F.col(id_col), F.explode(grams).alias("g"))
-        .select(F.col(id_col), F.col("g.pos").alias("pos"), F.col("g.shingle").alias("shingle"))
+        .select(
+            F.col(id_col),
+            F.posexplode(F.expr(word_grams_sql("__words", k))).alias("pos", "shingle"),
+        )
+        .select(F.col(id_col), (F.col("pos") + 1).alias("pos"), "shingle")
     )
     # document frequency over DISTINCT per-doc grams (word_shingles —
     # the per-row array_distinct there beats a countDistinct expand
@@ -753,14 +686,11 @@ def embedding_neardup_pairs(
     # (here: one → a single task evaluated every pair). One cheap
     # shuffle of the (id, vec) rows; the broadcast side is unaffected.
     # Width-gated (r14, settling the r13 verdict's one open
-    # regression): an input that already arrives in >= par partitions
-    # gains nothing from the shuffle — skip it so already-parallel
-    # corpora don't pay an extra exchange. The partition probe is
-    # plan-only (no job, sub-ms).
-    par = df.sparkSession.sparkContext.defaultParallelism
-    a = v
-    if v.rdd.getNumPartitions() < par:
-        a = a.repartition(par, F.col("vid"))
+    # regression): an input that already scans wide gains nothing from
+    # the shuffle — skip it so already-parallel corpora don't pay an
+    # extra exchange (_spread_par: file-count probe, launches no job).
+    par = _spread_par(v)
+    a = v if par is None else v.repartition(par, F.col("vid"))
     a = a.alias("a")
     b = v.alias("b")
     dot = F.aggregate(
@@ -841,8 +771,8 @@ def dedup_clusters(
     # removes 2 of 5 stages per round (measured in OPTIMIZATION_r13.md).
     from pyspark.sql import Observation
 
-    def _observed_checkpoint(edges: DataFrame, tag: str):
-        obs = Observation(tag)
+    def _observed_checkpoint(edges: DataFrame):
+        obs = Observation()
         ck = edges.observe(
             obs,
             F.count(F.lit(1)).alias("n"),
@@ -872,11 +802,8 @@ def dedup_clusters(
     # of pure driver time at sf0.1 — r13 optimization round); one SQL
     # statement is one analysis pass, with a physical plan identical
     # operator-for-operator to the DataFrame version.
-    import uuid
-
-    spark = pairs.sparkSession
-    view = f"__cc_edges_{uuid.uuid4().hex[:12]}"
-    round_sql = f"""
+    def round_sql(view: str) -> str:
+        return f"""
         WITH ls AS (
           SELECT dst AS src, m AS dst FROM (
             SELECT src, dst, LEAST(MIN(dst) OVER (PARTITION BY src), src) AS m
@@ -907,18 +834,12 @@ def dedup_clusters(
     # convergence compares consecutive ROUND checksums instead
     prev = None
     rounds = 0
-    try:
-        for i in range(max_iter):
-            edges.createOrReplaceTempView(view)
-            edges, cur = _observed_checkpoint(
-                spark.sql(round_sql), f"__cc_round_{view}_{i}"
-            )
-            rounds += 1
-            if cur == prev:
-                break
-            prev = cur
-    finally:
-        spark.catalog.dropTempView(view)
+    for _ in range(max_iter):
+        edges, cur = _observed_checkpoint(sql_over(round_sql, edges))
+        rounds += 1
+        if cur == prev:
+            break
+        prev = cur
     if stats is not None:
         stats["rounds"] = rounds
     # fixpoint edge set is a union of stars: (node, component_min) for
@@ -969,7 +890,7 @@ def ngram_decontaminate(
     """
     bench_grams = (
         benchmark.select(F.split(F.lower(F.col(text_col)), " ").alias("__words"))
-        .select(F.explode(shingles_of(F.col("__words"), n)).alias("gram"))
+        .select(F.explode(shingles_of("__words", n)).alias("gram"))
         .where(F.col("gram") != "")
         .distinct()
     )
@@ -980,7 +901,7 @@ def ngram_decontaminate(
         )
         .select(
             F.col("doc_id"),
-            F.explode(shingles_of(F.col("__words"), n)).alias("gram"),
+            F.explode(shingles_of("__words", n)).alias("gram"),
         )
         .where(F.col("gram") != "")
     )

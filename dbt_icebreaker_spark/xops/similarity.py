@@ -16,6 +16,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _bq, sql_over
+
 
 def _as_double_vec(df: DataFrame, id_col: str, vec_col: str, out_id: str) -> DataFrame:
     v = df.select(
@@ -51,16 +53,6 @@ def cosine_topk(
     pass — see dedup.minhash_lsh_pairs); expressions verbatim from the
     prior DataFrame rendering, oracle-locked via x06.
     """
-    import uuid
-
-    spark = corpus.sparkSession
-    tok = uuid.uuid4().hex[:12]
-    cview, qview = f"__ct_corpus_{tok}", f"__ct_queries_{tok}"
-    corpus.createOrReplaceTempView(cview)
-    queries.createOrReplaceTempView(qview)
-
-    from .dedup import _bq
-
     def _vec_cte(view: str, out_id: str) -> str:
         return f"""
           SELECT {out_id}, {out_id}_vec,
@@ -72,7 +64,7 @@ def cosine_topk(
                 FROM {view})
         """
 
-    sql = f"""
+    return sql_over(lambda cview, qview: f"""
         WITH q AS ({_vec_cte(qview, "query_id")}),
         c AS ({_vec_cte(cview, "neighbor_id")}),
         scored AS (
@@ -93,13 +85,7 @@ def cosine_topk(
                                                  neighbor_id ASC) AS rank
               FROM scored)
         WHERE rank <= {k}
-    """
-    try:
-        out = spark.sql(sql)
-    finally:
-        spark.catalog.dropTempView(cview)
-        spark.catalog.dropTempView(qview)
-    return out
+    """, corpus, queries)
 
 
 def hyperplane_buckets(
@@ -249,11 +235,6 @@ def kmeans_centroids(
     argmin — the one cascade point in an otherwise deterministic
     pipeline (same defense as lsh_topk.round_to).
     """
-    import uuid
-
-    spark = base.sparkSession
-    view = f"__km_vecs_{uuid.uuid4().hex[:12]}"
-    base.createOrReplaceTempView(view)
     argmin = (
         "array_min(transform(cs, c -> named_struct('dist', "
         "aggregate(zip_with(bid_vec, c.centroid, (x, y) -> (x - y) * (x - y)),"
@@ -285,9 +266,7 @@ def kmeans_centroids(
           GROUP BY cell
         )""")
         prev = f"centroids{i}"
-    from .dedup import _bq
-
-    sql = f"""
+    return sql_over(lambda view: f"""
         WITH v AS (
           SELECT {_bq(id_col)} AS bid,
                  transform({_bq(vec_col)}, x -> CAST(x AS DOUBLE)) AS bid_vec
@@ -300,12 +279,7 @@ def kmeans_centroids(
                 FROM v ORDER BY __ord LIMIT {n_cells})
         ){''.join(ctes)}
         SELECT cell, centroid FROM {prev}
-    """
-    try:
-        out = spark.sql(sql)
-    finally:
-        spark.catalog.dropTempView(view)
-    return out
+    """, base)
 
 
 def _nearest_cell(cells_col, vec_col):

@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import word_grams_sql
+
 # tiny per-language stopword lists for the n-gram/stopword heuristic
 STOPWORDS = {
     "en": ("the", "a", "of", "and", "to", "in", "is", "it", "that", "for"),
@@ -314,20 +316,17 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """
     # bind the word array as a projected attribute — codegen does no
     # CSE across lambda boundaries, so inline use would re-split the
-    # text once per gram (see xops/dedup.shingles_of)
+    # text once per gram (see xops/dedup.word_grams_sql)
     wdf = df.select(
         F.col(id_col).cast("long").alias("doc_id"),
         _words(F.lower(F.col(text_col))).alias("__words"),
     )
     words = F.col("__words")
     n_words = F.size(words)
-    grams2 = F.when(
-        n_words >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n_words - 1),
-            lambda i: F.array_join(F.slice(words, i, 2), " "),
-        ),
-    ).otherwise(F.expr("CAST(array() AS array<string>)"))
+    grams2 = F.coalesce(
+        F.expr(word_grams_sql("__words", 2)),
+        F.expr("CAST(array() AS array<string>)"),
+    )
     gdf = wdf.select(F.col("doc_id"), words, grams2.alias("__g2"))
     g2 = F.col("__g2")
     n_g2 = F.size(g2)
@@ -518,27 +517,19 @@ def top_ngrams(
     for contamination analysis, boilerplate detection, and quality
     dashboards. Counts every occurrence (not per-doc distinct).
 
-    Shape: per-row n-gram arrays are built JVM-side (transform over a
-    sequence — same kernel as dedup.shingles_of), exploded, and
+    Shape: per-row n-gram arrays are built JVM-side
+    (dedup.word_grams_sql over the bound word array), exploded, and
     counted in ONE partial-aggregated groupBy; top-k is a global sort
     of the (distinct n-gram) aggregate, which is tiny relative to the
     corpus. Deterministic tiebreak: count DESC, ngram ASC.
 
     Output: (ngram, n_docs, occurrences).
     """
-    words = _words(F.col(text_col))
     # NOT dedup.shingles_of — that is array_distinct'd (per-doc
     # membership); a frequency table needs every occurrence
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - (n - 1)),
-            lambda i: F.array_join(F.slice(words, i, n), " "),
-        ),
-    )
     exploded = df.select(
-        F.col(id_col).alias("__id"), F.explode(grams).alias("ngram")
-    )
+        F.col(id_col).alias("__id"), _words(F.col(text_col)).alias("__words")
+    ).select("__id", F.explode(F.expr(word_grams_sql("__words", n))).alias("ngram"))
     return (
         exploded.groupBy("ngram")
         .agg(

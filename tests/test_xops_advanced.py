@@ -59,70 +59,82 @@ class TestDedupClusters:
         got = {r.doc_id: r.cluster_id for r in dedup.dedup_clusters(pairs).collect()}
         assert got == {1: 1, 2: 1, 3: 1}
 
-    def test_sql_rendering_matches_dataframe_rendering(self, spark):
-        # r13 optimization: minhash_lsh_pairs / minhash_signatures are
-        # one-statement SQL renderings; the composable DataFrame
-        # rendering (word_shingles → signatures_from_shingles →
-        # pairs_from_signatures) is retained and must stay
-        # row-identical — this is the equivalence the oracle relies on
+    def test_minhash_matches_duckdb(self, spark, duck):
+        # minhash_signatures / minhash_lsh_pairs are the only rendering
+        # of the LSH stages — pin signature columns and values and the
+        # candidate pairs against plain DuckDB SQL over the same parquet
         register_dir(spark, SF)
         docs = spark.table("documents")
-        ref_sig = dedup.signatures_from_shingles(
-            dedup.word_shingles(docs, "doc_id", "text", k=3), "doc_id"
+        sig_cols = ", ".join(
+            f"min(md5(concat_ws(':', {i}, shingle))) AS \"{i}\"" for i in range(8)
         )
-        new_sig = dedup.minhash_signatures(docs, "doc_id", "text")
-        assert new_sig.columns == ref_sig.columns
-        assert sorted(map(tuple, new_sig.collect())) == sorted(
-            map(tuple, ref_sig.collect())
+        band_rows = " UNION ALL ".join(
+            f"SELECT doc_id, {b} AS band, "
+            f"md5(concat_ws('|', {b}, \"{2 * b}\", \"{2 * b + 1}\")) AS band_key "
+            "FROM sig"
+            for b in range(4)
         )
-        ref_pairs = dedup.pairs_from_signatures(ref_sig, "doc_id")
-        new_pairs = dedup.minhash_lsh_pairs(docs, "doc_id", "text")
-        assert sorted(map(tuple, new_pairs.collect())) == sorted(
-            map(tuple, ref_pairs.collect())
-        )
+        ctes = f"""
+            WITH words AS (
+              SELECT doc_id, string_split(text, ' ') AS w
+              FROM read_parquet('{SF}/documents.parquet')
+            ),
+            sh AS (
+              SELECT DISTINCT doc_id, array_to_string(w[i:i + 2], ' ') AS shingle
+              FROM words, LATERAL unnest(generate_series(1, len(w) - 2)) AS t(i)
+              WHERE len(w) >= 3
+            ),
+            sig AS (
+              SELECT doc_id, {sig_cols} FROM sh WHERE shingle <> '' GROUP BY doc_id
+            ),
+            bands AS ({band_rows})
+        """
+        want_sig = duck.sql(ctes + "SELECT * FROM sig").fetchall()
+        got_sig = dedup.minhash_signatures(docs, "doc_id", "text")
+        assert got_sig.columns == ["doc_id"] + [str(i) for i in range(8)]
+        assert sorted(map(tuple, got_sig.collect())) == sorted(want_sig)
+        want_pairs = duck.sql(ctes + """
+            SELECT DISTINCT CAST(a.doc_id AS BIGINT), CAST(b.doc_id AS BIGINT)
+            FROM bands a JOIN bands b
+              ON a.band = b.band AND a.band_key = b.band_key
+             AND a.doc_id < b.doc_id
+        """).fetchall()
+        got_pairs = dedup.minhash_lsh_pairs(docs, "doc_id", "text").collect()
+        assert want_pairs
+        assert sorted(map(tuple, got_pairs)) == sorted(want_pairs)
 
-    def test_ngram_jaccard_sql_matches_dataframe_rendering(self, spark):
-        # r13 advisor: the ngram_jaccard_pairs SQL rewrite had no
-        # direct equivalence test — pin it against the retained
-        # DataFrame building blocks (word_shingles + window + size-
-        # ratio-pruned join), expressions mirrored from the docstring
-        from pyspark.sql import Window
-
+    def test_ngram_jaccard_matches_duckdb(self, spark, duck):
+        # exact 2-gram Jaccard pairs above the threshold, against plain
+        # DuckDB SQL (no size-ratio prune there: the prune is lossless)
         register_dir(spark, SF)
         docs = spark.table("documents").filter(F.col("doc_id") < 400)
         k, t = 2, 0.2
-        sh = dedup.word_shingles(docs, "doc_id", "text", k=k)
-        sized = sh.withColumn(
-            "n_sh", F.count("*").over(Window.partitionBy("doc_id"))
-        )
-        a, b = sized.alias("a"), sized.alias("b")
-        ref = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & (F.col("a.n_sh") * t <= F.col("b.n_sh"))
-                & (F.col("b.n_sh") * t <= F.col("a.n_sh")),
+        want = duck.sql(f"""
+            WITH words AS (
+              SELECT doc_id, string_split(text, ' ') AS w
+              FROM read_parquet('{SF}/documents.parquet') WHERE doc_id < 400
+            ),
+            sh AS (
+              SELECT DISTINCT doc_id, array_to_string(w[i:i + {k - 1}], ' ') AS shingle
+              FROM words, LATERAL unnest(generate_series(1, len(w) - {k - 1})) AS t(i)
+              WHERE len(w) >= {k}
+            ),
+            sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+            shared AS (
+              SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS ns
+              FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+              GROUP BY 1, 2
             )
-            .groupBy(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.col("a.n_sh").alias("na"),
-                F.col("b.n_sh").alias("nb"),
-            )
-            .agg(F.count("*").alias("n_shared"))
-            .select(
-                F.col("doc_a").cast("long"),
-                F.col("doc_b").cast("long"),
-                (F.col("n_shared") / (F.col("na") + F.col("nb") - F.col("n_shared")))
-                .cast("double").alias("jaccard"),
-            )
-            .where(F.col("jaccard") >= t)
-        )
-        new = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", k=k, threshold=t)
-        assert sorted(map(tuple, new.collect())) == sorted(
-            map(tuple, ref.collect())
-        )
+            SELECT CAST(da AS BIGINT), CAST(db AS BIGINT),
+                   CAST(ns AS DOUBLE) / (sa.n + sb.n - ns) AS jaccard
+            FROM shared
+            JOIN sizes sa ON sa.doc_id = da
+            JOIN sizes sb ON sb.doc_id = db
+            WHERE CAST(ns AS DOUBLE) / (sa.n + sb.n - ns) >= {t}
+        """).fetchall()
+        got = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", k=k, threshold=t)
+        assert want
+        assert sorted(map(tuple, got.collect())) == sorted(want)
 
     def test_cosine_topk_sql_matches_dataframe_rendering(self, spark):
         # r13 advisor: same pin for the cosine_topk SQL rewrite
@@ -218,6 +230,101 @@ class TestDedupClusters:
             .count()
         )
         assert bad == 0
+
+
+def _executed_plan(df) -> str:
+    import contextlib
+    import io
+
+    df.collect()
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+class TestLshSingleSource:
+    """The MinHash/LSH stages have one SQL rendering each; these pin
+    the shingle repartition, the job-free width probe, the shared hash
+    family and the temp-view helper."""
+
+    def test_shingle_repartition_on_narrow_and_wide_inputs(self, spark, tmp_path):
+        # the pre-shingle text repartition is unconditional (an A/B on
+        # a 16-file 10x corpus measured no gain from skipping it on wide
+        # inputs): present for a 1-file input and for one scanning from
+        # >= defaultParallelism files
+        register_dir(spark, SF)
+        par = spark.sparkContext.defaultParallelism
+        docs = spark.table("documents").select("doc_id", "text")
+        for n_files in (1, par):
+            path = str(tmp_path / f"docs_{n_files}")
+            docs.repartition(n_files).write.parquet(path)
+            src = spark.read.parquet(path)
+            assert len(src.inputFiles()) == n_files
+            for out in (
+                dedup.minhash_lsh_pairs(src, "doc_id", "text"),
+                dedup.word_shingles(src, "doc_id", "text"),
+            ):
+                plan = _executed_plan(out)
+                assert "REPARTITION_BY_NUM" in plan, (n_files, plan)
+
+    def test_embedding_width_probe_launches_no_job(self, spark):
+        # x05's width probe reads input files only: on a composed input
+        # (a broadcast join) building the operator must not plan the
+        # input physically, which would run the broadcast job
+        register_dir(spark, SF)
+        emb = spark.table("embeddings")
+        keys = spark.table("embeddings").select("vec_id").filter("vec_id < 200")
+        composed = emb.join(F.broadcast(keys), "vec_id")
+        sc = spark.sparkContext
+        group = "x05_width_probe_no_job"
+        sc.setJobGroup(group, "width probe")
+        try:
+            out = dedup.embedding_neardup_pairs(
+                composed, "vec_id", "embedding", threshold=0.35
+            )
+        finally:
+            sc.setJobGroup(None, None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert out.count() > 0
+
+    def test_sql_minhash_matches_minhash_signatures(self, spark):
+        # the SQL MINHASH aggregate and the dedup signature stage render
+        # one hash family: component i agrees for every document
+        from dbt_icebreaker_spark import IcebreakerEngine
+
+        register_dir(spark, SF)
+        docs = spark.table("documents")
+        dedup.word_shingles(docs, "doc_id", "text").createOrReplaceTempView(
+            "minhash_pin_shingles"
+        )
+        eng = IcebreakerEngine(spark, schema="minhash_pin")
+        got = {
+            r.doc_id: list(r.mh)
+            for r in eng.execute(
+                "SELECT doc_id, MINHASH(8, shingle) AS mh "
+                "FROM minhash_pin_shingles GROUP BY doc_id"
+            ).collect()
+        }
+        want = {
+            r["doc_id"]: [r[str(i)] for i in range(8)]
+            for r in dedup.minhash_signatures(docs, "doc_id", "text").collect()
+        }
+        assert len(want) == docs.count()
+        assert got == want
+
+    def test_sql_over_keeps_persisted_input_cached(self, spark):
+        # the helper drops its temp view without uncaching: a persisted
+        # input (x25's shingles) must stay cached and be read from memory
+        register_dir(spark, SF)
+        docs = spark.table("documents")
+        sh = dedup.word_shingles(docs, "doc_id", "text").persist()
+        try:
+            sig = dedup.signatures_from_shingles(sh, "doc_id")
+            assert sh.storageLevel.useMemory
+            assert "InMemoryTableScan" in _executed_plan(sig)
+        finally:
+            sh.unpersist()
 
 
 class TestIvfTopk:
